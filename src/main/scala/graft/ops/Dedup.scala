@@ -288,7 +288,10 @@ object Dedup {
     * O(log diameter), which matters on chain-shaped near-dup graphs
     * (embedding chains at a loose threshold), not just dense clusters.
     * Every step is a distributed join/aggregate; the driver loop only
-    * reads the converged flag.
+    * reads each round's changed-label count. A round budget that runs
+    * out while labels still change throws an `IllegalStateException`
+    * naming `maxIter` and that count, instead of returning unconverged
+    * components.
     *
     * `roundPartitions` (or the [[Rounds.PartitionsKey]] session conf)
     * sizes the per-round label exchange and the checkpointed state —
@@ -319,6 +322,7 @@ object Dedup {
   private[graft] def connectedComponentsFrom(pairs: DataFrame,
       seed: Option[DataFrame], maxIter: Int = 25,
       roundPartitions: Option[Int] = None): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val rp = Rounds.resolve(pairs.sparkSession, roundPartitions)
     // symmetrize in ONE pass over `pairs`: the union-of-two-selects form
     // evaluates the (potentially expensive — q46/q83 feed the whole
@@ -366,29 +370,10 @@ object Dedup {
     }
     var labels = Rounds.shape(initial, col("id"), rp)
       .localCheckpoint()
-    val spark = pairs.sparkSession
+    var changed = 0L
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // convergence is detected DURING the checkpoint materialization:
-      // a side-effecting marker on the final projection records whether
-      // any label shrank this round, so the loop runs ONE job per round
-      // instead of two (the r21 scaling block showed the whole CC family
-      // driver-round-bound — 8v32 ratios 0.28-0.78 — and the count() job
-      // was a second full pass over the corpus-sized state per round).
-      // The decision only needs changed == 0 vs > 0, which accumulators
-      // answer reliably in every stage position: successful-task updates
-      // are never dropped, and retry double-counting can only inflate a
-      // positive count, never fabricate one. Dropping `prev` from the
-      // checkpointed state also narrows the per-round materialized
-      // frame from (id, prev, component) to (id, component).
-      val acc = spark.sparkContext.longAccumulator("graft.cc.changed")
-      // nondeterministic so the optimizer never duplicates, reorders, or
-      // constant-folds the side effect (guide §4.4's duplication hazard)
-      val mark = udf((c: java.lang.Long, p: java.lang.Long) => {
-        if (c != null && p != null && c.longValue < p.longValue) acc.add(1L)
-        c
-      }).asNondeterministic()
       val neighborMin = edges
         .join(labels.select(col("id"), col("component")), col("b") === col("id"))
         .groupBy(col("a")).agg(min(col("component")).as("nbr_min"))
@@ -400,20 +385,30 @@ object Dedup {
       // pointer jump: follow the new label one hop (label(label(x))) —
       // labels only ever shrink, so the composed label is still a
       // reachable node and chains halve every round, turning O(diameter)
-      // convergence into O(log diameter) on chain-shaped graphs
-      val next = Rounds.shape(stepped
+      // convergence into O(log diameter) on chain-shaped graphs.
+      // Convergence is read off the checkpoint job itself: a marker
+      // counts the labels that shrank this round, so the loop runs ONE
+      // job chain per round instead of two (the r21 scaling block showed
+      // the whole CC family bound by round trips — 8v32 ratios 0.28-0.78 —
+      // and a count() job was a second full pass over the corpus-sized
+      // state per round). `prev` feeds the marker only; the
+      // materialized state stays (id, component).
+      val next = Rounds.checkpoint(stepped
         .join(stepped.select(col("id").as("jid"), col("component").as("jcomp")),
           col("component") === col("jid"), "left")
-        .select(col("id"),
-          mark(least(col("component"), coalesce(col("jcomp"), col("component"))),
-            col("prev")).as("component")),
-        col("id"), rp)
-        .localCheckpoint()
+        .select(col("id"), col("prev"),
+          least(col("component"), coalesce(col("jcomp"), col("component"))).as("component")),
+        col("id"), rp, sums = Seq(when(col("component") < col("prev"), 1.0)),
+        drop = Seq("prev"))
       stepped.unpersist()
-      if (acc.value == 0L) converged = true else labels = next
+      changed = next.sums(0).toLong
+      if (changed == 0L) converged = true else labels = next.df
       iter += 1
     }
     edges.unpersist()
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge within maxIter=$maxIter rounds: " +
+        s"the last round still changed $changed labels")
     labels.select(col("id"), col("component"))
   }
 

@@ -10,14 +10,16 @@ import org.apache.spark.sql.functions._
   * graph" measure — public algorithm, Brin & Page 1998) with proper
   * dangling-mass redistribution.
   *
-  * Scale shape: every iteration is two node/edge-keyed shuffles — the
-  * rank/out-degree join and the inbound-contribution aggregate (map-side
-  * combined on the destination) — plus a SCALAR dangling-mass aggregate
-  * (one row; the only driver-visible value besides the node count). The
-  * ranks frame stays node-sized, edges edge-sized; nothing corpus-wide
-  * ever sits on the driver. Lineage is flattened with localCheckpoint
-  * every few rounds (the CC-loop discipline), so plan size and recompute
-  * cost are constant per iteration.
+  * Scale shape: every iteration is the rank/edge contribution join and
+  * one node-keyed aggregate of the contributions (map-side combined on
+  * the destination; the node base rides it, so there is no node-base
+  * join) — and one eager localCheckpoint of the node-sized rank frame,
+  * EVERY round. The only scalars the loop reads back, the node count
+  * and each round's dangling mass, are read off those checkpoint jobs
+  * by [[Rounds.checkpoint]] markers, so a round costs no job beyond its
+  * own materialization. The ranks frame stays node-sized, edges
+  * edge-sized; nothing corpus-wide is ever collected, and plan size and
+  * recompute cost are constant per iteration.
   *
   * Fixed iteration count rather than convergence detection keeps runs
   * deterministic and oracle-replayable; production callers pick iters
@@ -160,64 +162,31 @@ object Graph {
     * redistribute their mass uniformly each iteration, so total rank
     * mass stays exactly 1 up to float addition. */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointEvery: Int = 1): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    val rp = Rounds.resolve(edges.sparkSession)
     // the iterative-access exception to the "bounded caches only"
-    // policy: every iteration re-reads edges and the node base, so they
-    // persist (Dataset cache = MEMORY_AND_DISK — spills, never OOMs);
-    // the production alternative for edges past cluster disk is a
-    // one-time checkpoint to parquet, same access pattern. The edge
-    // cache is pre-partitioned on its per-round join key (src), so the
+    // policy: every iteration re-reads the edges, so they persist
+    // (Dataset cache = MEMORY_AND_DISK — spills, never OOMs); the
+    // production alternative for edges past cluster disk is a one-time
+    // checkpoint to parquet, same access pattern. The edge cache is
+    // pre-partitioned on its per-round join key (src), so the
     // contribution join exchanges edges ONCE here instead of every
     // round (guide §2.4: two operations keyed the same way share one
     // exchange).
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().repartition(col("src")).cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    // out-degree is STATIC across iterations, so it is joined into the
-    // node base ONCE here — the loop below used to join ranks⋈outdeg
-    // twice per round (a dangling anti-join plus the contribution
-    // join); carrying `deg` (null = dangling) in the rank state turns
-    // the dangling mass into a joinless columnar aggregate over the
-    // SAME multiset of ranks and drops both per-round node-sized joins.
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
-    val base = nodes.join(outdeg, nodes("node") === outdeg("src"), "left")
-      .select(col("node"), col("deg"))
-      .repartition(col("node")).cache()
-    // the graph's node count — a scalar, needed in the teleport term
-    val n = base.count().toDouble
-    var ranks = base.withColumn("rank", lit(1.0 / n))
-    var i = 1
-    while (i <= iters) {
-      // dangling mass: ranks of nodes with no out-edges (scalar agg —
-      // no join: deg is carried in the state, null marks dangling)
-      val dangling = ranks
-        .agg(coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0.0)).as("dsum"))
-      // per-edge contribution rank(src)/deg(src), summed at the dst
-      val inbound = ranks.filter(col("deg").isNotNull)
-        .select(col("node").as("src"), (col("rank") / col("deg")).as("share"))
+    // node count and dangling-node count come off the base's checkpoint
+    val b = Rounds.checkpoint(outBase(e, lit(1.0)), col("node"), rp,
+      sums = Seq(when(col("out") === 0, 1.0)))
+    val n = b.rows.toDouble
+    rankRounds(b.df, lit(1.0 / n), b.sums(0) * (1.0 / n), iters, rp)(
+      ranks => ranks.filter(col("out") > 0)
+        .select(col("node").as("src"), (col("rank") / col("out")).as("share"))
         .join(e, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share")).as("in_sum"))
-      ranks = base.join(inbound, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("deg"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dsum") / n)).as("rank"))
-      // materialize EVERY iteration by default: each round reads `ranks`
-      // TWICE (the dangling aggregate and the contribution join), so an
-      // un-materialized round doubles its predecessor's recompute — 2^k
-      // nesting by iteration k, the classic iterative-DataFrame trap
-      // (checkpointEvery > 1 is only for graphs where a lazy round is
-      // cheaper than a node-frame write)
-      if (i % checkpointEvery == 0)
-        ranks = Rounds.shape(ranks, col("node")).localCheckpoint(eager = true)
-      i += 1
-    }
-    ranks.select(col("node"), col("rank"))
+        .select(col("dst").as("node"), col("share")),
+      (in, dangling) => lit((1.0 - damping) / n) + lit(damping) * (in + lit(dangling / n)))
   }
 
   /** Edge-weighted PageRank: contributions split ∝ edge weight instead
@@ -232,13 +201,13 @@ object Graph {
     * redistribute uniformly, exactly as unweighted dangling nodes do.
     *
     * Scale shape identical to [[pageRank]]: the weight-sum denominator
-    * replaces the degree count in the same node-sized cached frame; two
-    * keyed shuffles + one scalar aggregate per iteration. */
+    * replaces the degree count in the same node base. */
   def weightedPageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      srcCol: String = "src", dstCol: String = "dst", weightCol: String = "weight",
-      checkpointEvery: Int = 1): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst",
+      weightCol: String = "weight"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    val rp = Rounds.resolve(edges.sparkSession)
     // weight-summed edge frame, pre-partitioned on the per-round join
     // key (src) so the contribution join exchanges edges once at cache
     // time, not every round — same discipline as pageRank's edge cache
@@ -248,38 +217,15 @@ object Graph {
       .filter(col("w") > 0) // also drops null weights
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .repartition(col("src")).cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    // the out-mass denominator is STATIC — joined into the node base
-    // once (null wout = dangling) instead of twice per round (the
-    // anti-join + contribution join the unweighted form also dropped)
-    val outw = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-    val base = nodes.join(outw, nodes("node") === outw("src"), "left")
-      .select(col("node"), col("wout"))
-      .repartition(col("node")).cache()
-    val n = base.count().toDouble
-    var ranks = base.withColumn("rank", lit(1.0 / n))
-    var i = 1
-    while (i <= iters) {
-      val dangling = ranks
-        .agg(coalesce(sum(when(col("wout").isNull, col("rank"))), lit(0.0)).as("dsum"))
-      val inbound = ranks.filter(col("wout").isNotNull)
-        .select(col("node").as("src"), col("rank"), col("wout"))
+    val b = Rounds.checkpoint(outBase(e, col("w")), col("node"), rp,
+      sums = Seq(when(col("out") === 0, 1.0)))
+    val n = b.rows.toDouble
+    rankRounds(b.df, lit(1.0 / n), b.sums(0) * (1.0 / n), iters, rp)(
+      ranks => ranks.filter(col("out") > 0)
+        .select(col("node").as("src"), col("rank"), col("out"))
         .join(e, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") * col("w") / col("wout")).as("in_sum"))
-      ranks = base.join(inbound, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("wout"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dsum") / n)).as("rank"))
-      // materialize every iteration: consumed twice per round (the 2^k
-      // recompute trap — see pageRank)
-      if (i % checkpointEvery == 0)
-        ranks = Rounds.shape(ranks, col("node")).localCheckpoint(eager = true)
-      i += 1
-    }
-    ranks.select(col("node"), col("rank"))
+        .select(col("dst").as("node"), (col("rank") * col("w") / col("out")).as("share")),
+      (in, dangling) => lit((1.0 - damping) / n) + lit(damping) * (in + lit(dangling / n)))
   }
 
   /** Personalized PageRank: teleport mass goes to a SEED set instead of
@@ -292,60 +238,78 @@ object Graph {
     * seed distribution, the standard personalized formulation, so total
     * rank mass stays 1 and non-seed-reachable nodes decay to exactly 0.
     *
-    * Scale shape is [[pageRank]]'s (two keyed shuffles + a scalar per
-    * iteration) plus one broadcast-sized left join building the
-    * per-node teleport column — seeds are query-sized, never
+    * Scale shape is [[pageRank]]'s plus one broadcast-sized left join
+    * marking the seeds in the node base — seeds are query-sized, never
     * corpus-sized. */
   def personalizedPageRank(edges: DataFrame, iters: Int, seeds: DataFrame,
-      damping: Double = 0.85, srcCol: String = "src", dstCol: String = "dst",
-      checkpointEvery: Int = 1): DataFrame = {
+      damping: Double = 0.85, srcCol: String = "src",
+      dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    val rp = Rounds.resolve(edges.sparkSession)
     // edge cache pre-partitioned on the per-round join key, as in
     // pageRank
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().repartition(col("src")).cache()
-    val sd = seeds.toDF("node").distinct()
-    // the node base carries BOTH static per-node columns: the teleport
-    // probability (1/k on seeds, 0 elsewhere) and the out-degree (null
-    // = dangling) — so the loop needs no per-round node-sized join
-    // beyond the final assembly (the same two-joins-per-round removal
-    // as pageRank)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(broadcast(sd.withColumn("is_seed", lit(true))), Seq("node"), "left")
-      .cache()
-    val k = nodes.filter(col("is_seed")).count().toDouble
+    val sd = seeds.toDF("node").distinct().withColumn("is_seed", lit(true))
+    // the seed count k and the dangling-seed count (round 1's dangling
+    // mass, over k) come off the base's checkpoint
+    val b = Rounds.checkpoint(
+      outBase(e, lit(1.0)).join(broadcast(sd), Seq("node"), "left"), col("node"), rp,
+      sums = Seq(when(col("is_seed"), 1.0), when(col("is_seed") && col("out") === 0, 1.0)))
+    val k = b.sums(0)
     require(k > 0, "no seed appears in the graph")
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
-    val base = nodes
-      .join(outdeg, nodes("node") === outdeg("src"), "left")
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0 / k)).otherwise(lit(0.0)).as("tele"),
-        col("deg"))
-      .repartition(col("node")).cache()
-    var ranks = base.select(col("node"), col("tele"), col("deg"),
-      col("tele").as("rank"))
-    var i = 1
-    while (i <= iters) {
-      val dangling = ranks
-        .agg(coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0.0)).as("dsum"))
-      val inbound = ranks.filter(col("deg").isNotNull)
-        .select(col("node").as("src"), (col("rank") / col("deg")).as("share"))
+    // static per-node teleport probability: 1/k on seeds, 0 elsewhere
+    val base = b.df.select(col("node"), col("out"),
+      when(col("is_seed"), lit(1.0 / k)).otherwise(lit(0.0)).as("tele"))
+    rankRounds(base, col("tele"), b.sums(1) * (1.0 / k), iters, rp)(
+      ranks => ranks.filter(col("out") > 0)
+        .select(col("node").as("src"), (col("rank") / col("out")).as("share"))
         .join(e, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share")).as("in_sum"))
-      ranks = base.join(inbound, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("tele"), col("deg"),
-          (lit(1.0 - damping) * col("tele") + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dsum") * col("tele")))
-            .as("rank"))
-      // materialize every iteration: ranks is consumed twice per round
-      // (the 2^k recompute trap — see pageRank)
-      if (i % checkpointEvery == 0)
-        ranks = Rounds.shape(ranks, col("node")).localCheckpoint(eager = true)
-      i += 1
+        .select(col("dst").as("node"), col("share")),
+      (in, dangling) => lit(1.0 - damping) * col("tele") +
+        lit(damping) * (in + lit(dangling) * col("tele")))
+  }
+
+  /** The PageRank node base in ONE aggregate: each edge tags its src
+    * with `out` (1 per edge, or its weight) and its dst with 0, summed
+    * per node into (node, out) — the out-degree or out-weight, with
+    * 0 marking a dangling node. */
+  private def outBase(e: DataFrame, out: Column): DataFrame =
+    e.select(col("src").as("node"), out.as("out"))
+      .union(e.select(col("dst").as("node"), lit(0.0).as("out")))
+      .groupBy(col("node")).agg(sum(col("out")).as("out"))
+
+  /** The round loop shared by the PageRank variants. `base` is the
+    * materialized node base (node, out, ...); `shares` maps the rank
+    * state to one (node, share) row per edge, keyed by its destination;
+    * `rank` gives the next rank from the inbound sum and the dangling
+    * mass. The base rows join the shares' aggregate with a zero share,
+    * so every node keeps its row without a node-base join. Each round
+    * is ONE eager [[Rounds.checkpoint]] of the node-sized rank frame,
+    * and its dangling mass (the ranks of out = 0 nodes) is read off
+    * that job for the next round, which takes it as a literal: no
+    * scalar aggregate job, no broadcast cross join. The checkpoint also
+    * keeps the lineage flat, so plan size and recompute cost are
+    * constant per iteration (the rank state is read twice per round,
+    * which would otherwise nest 2^k recomputes by round k). */
+  private def rankRounds(base: DataFrame, rank0: Column, dangling0: Double,
+      iters: Int, rp: Option[Int])(shares: DataFrame => DataFrame,
+      rank: (Column, Double) => Column): DataFrame = {
+    val static = base.columns.filter(_ != "node").toSeq
+    val zero = base.withColumn("share", lit(0.0))
+    var ranks = base.withColumn("rank", rank0)
+    var dangling = dangling0
+    for (_ <- 1 to iters) {
+      val r = Rounds.checkpoint(
+        zero.unionByName(shares(ranks), allowMissingColumns = true)
+          .groupBy(col("node"))
+          .agg(sum(col("share")).as("in_sum"), static.map(c => max(col(c)).as(c)): _*)
+          .select(col("node") +: static.map(col) :+
+            rank(col("in_sum"), dangling).as("rank"): _*),
+        col("node"), rp, sums = Seq(when(col("out") === 0, col("rank"))))
+      ranks = r.df
+      dangling = r.sums(0)
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -658,33 +622,34 @@ object Graph {
     * convention), not a bit-equality guarantee.
     *
     * Scale shape per round: two edge-keyed join+aggregate passes
-    * (map-side combined, node-keyed — never all-pairs) and two 1-row
-    * max frames broadcast back; each half-step ends in an EAGER
-    * localCheckpoint (the [[pageRank]]/[[kCore]] round-lineage
-    * discipline), so plan size and recompute cost stay constant in
-    * `iters` and the returned frames are already materialized — the
-    * edge cache is then released in a finally without robbing callers
-    * of its benefit or leaking it on failure. Returns (hubs (u, h),
+    * (map-side combined, node-keyed — never all-pairs). Each half-step
+    * ends in ONE eager [[Rounds.checkpoint]] of its raw scores whose
+    * max marker is the normalizer, applied as a literal in a projection
+    * over the materialized blocks — no 1-row max frame, no broadcast
+    * cross join. Plan size and recompute cost stay constant in `iters`,
+    * and the returned frames read only checkpointed blocks — the edge
+    * cache is then released in a finally without robbing callers of its
+    * benefit or leaking it on failure. Returns (hubs (u, h),
     * authorities (i, a)) after `iters` full rounds. */
   def hits(edges: DataFrame, uCol: String = "u", iCol: String = "i",
       iters: Int = 2): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    val rp = Rounds.resolve(edges.sparkSession)
     val e = edges.select(col(uCol).as("u"), col(iCol).as("i"))
       .distinct().cache()
+    // one half-step: materialize the raw scores, max-normalize to 6dp
+    def normalized(raw: DataFrame, key: String, score: String): DataFrame = {
+      val r = Rounds.checkpoint(raw, col(key), rp, max = Some(col("raw")))
+      r.df.select(col(key), round(col("raw") / lit(r.max), 6).as(score))
+    }
     try {
       var hub = e.select(col("u")).distinct().withColumn("h", lit(1.0))
       var auth: DataFrame = null
       for (_ <- 1 to iters) {
-        val rawA = e.join(hub, "u").groupBy(col("i")).agg(sum(col("h")).as("ra"))
-        auth = Rounds.shape(rawA
-          .crossJoin(broadcast(rawA.agg(max(col("ra")).as("am"))))
-          .select(col("i"), round(col("ra") / col("am"), 6).as("a")), col("i"))
-          .localCheckpoint(eager = true)
-        val rawH = e.join(auth, "i").groupBy(col("u")).agg(sum(col("a")).as("rh"))
-        hub = Rounds.shape(rawH
-          .crossJoin(broadcast(rawH.agg(max(col("rh")).as("hm"))))
-          .select(col("u"), round(col("rh") / col("hm"), 6).as("h")), col("u"))
-          .localCheckpoint(eager = true)
+        auth = normalized(
+          e.join(hub, "u").groupBy(col("i")).agg(sum(col("h")).as("raw")), "i", "a")
+        hub = normalized(
+          e.join(auth, "i").groupBy(col("u")).agg(sum(col("a")).as("raw")), "u", "h")
       }
       (hub, auth)
     } finally {
@@ -705,8 +670,8 @@ object Graph {
     * Fixed `maxRounds` (like [[pageRank]]'s fixed iterations) keeps the
     * result deterministic and oracle-replayable even when peeling
     * hasn't converged; synchronous rounds mean the result is
-    * partition-order-independent. Convergence detection would be the
-    * CC-loop count() — callers who need the true core pass maxRounds
+    * partition-order-independent. The loop stops early once a round
+    * peels nothing, so callers who need the true core pass maxRounds
     * generous (peeling converges in O(diameter)-ish rounds in
     * practice; every round strictly shrinks the node set or stops).
     *
@@ -719,53 +684,42 @@ object Graph {
       aCol: String = "u1", bCol: String = "u2"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val spark = edges.sparkSession
+    val rp = Rounds.resolve(edges.sparkSession)
     // Early exit once a peel drops nothing (r22): peeling is monotone —
     // a round that removes no edge removes no node, so every later
     // round is an identity and the registered fixed `maxRounds` (the
     // determinism contract) only bounds the loop; the OUTPUT of exiting
     // early is bit-identical (measured on q144's graph at sf0.1: the
     // peel converges after round 1, so rounds 2-4 were pure no-op
-    // jobs). The edge count is read off each round's own checkpoint
-    // materialization through a counted marker column — no extra job,
-    // the CC-fuse machinery. The marker column sits ABOVE the
-    // Rounds.shape exchange so it always evaluates in the RESULT stage
-    // of the checkpoint job, where accumulator updates are exactly-once
-    // — an equality test is only trustworthy without retry inflation
-    // (unlike the CC loop's zero-vs-positive test, which is safe in any
-    // stage position). `_rc` is materialized in the checkpointed blocks
-    // (8 bytes/row) and never escapes: every consumer projects (a, b).
-    def counted(df: DataFrame): (DataFrame, org.apache.spark.util.LongAccumulator) = {
-      val acc = spark.sparkContext.longAccumulator("graft.kcore.edges")
-      val m = udf(() => { acc.add(1L); 1L }).asNondeterministic()
-      (df.withColumn("_rc", m()).localCheckpoint(eager = true), acc)
-    }
-    var (e, acc0) = counted(
+    // jobs). The edge count is the row count of each round's own
+    // [[Rounds.checkpoint]] — no extra job, and exact (result-stage
+    // marker), which an equality test needs. The checkpoint also
+    // avoids the 2^k recompute nesting: e is consumed twice per round
+    // (degree agg + both semi-joins share it).
+    var cur = Rounds.checkpoint(
       edges.select(col(aCol).as("a"), col(bCol).as("b"))
         .filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct())
-    var prev = acc0.value
+        .distinct(), col("a"), rp)
     var r = 1
     var converged = false
     while (r <= maxRounds && !converged) {
+      val e = cur.df
       val deg = e.select(col("a").as("node")).union(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       val keep = deg.filter(col("degree") >= k).select(col("node"))
-      val (next, acc) = counted(Rounds.shape(e
+      val next = Rounds.checkpoint(e
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")), col("a")))
-      // e is consumed twice next round (degree agg + both semi-joins
-      // share it) — the eager checkpoint inside counted() avoids the
-      // 2^k recompute nesting
-      e = next
-      if (acc.value == prev) converged = true else prev = acc.value
+        .select(col("a"), col("b")), col("a"), rp)
+      converged = next.rows == cur.rows
+      cur = next
       r += 1
     }
     // degrees of the subgraph as left after exactly maxRounds peels
     // (early exit only skips identity rounds) — no trailing filter, so
     // the oracle replays the identical rounds
+    val e = cur.df
     e.select(col("a").as("node")).union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
   }

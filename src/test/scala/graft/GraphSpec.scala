@@ -21,11 +21,11 @@ class GraphSpec extends SparkSpec {
   }
 
   test("iterating across the localCheckpoint boundary preserves the fixed point") {
-    // checkpointEvery=2 over 6 iterations crosses the boundary three
-    // times; the cycle's fixed point must survive each re-materialization
+    // every round ends in its own localCheckpoint, so 6 iterations cross
+    // the boundary six times; the cycle's fixed point must survive each
+    // re-materialization
     val e = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
-    val r = Graph.pageRank(e, iters = 6, checkpointEvery = 2)
-      .as[(String, Double)].collect().toMap
+    val r = Graph.pageRank(e, iters = 6).as[(String, Double)].collect().toMap
     r.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-12, r.toString))
   }
 
