@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The dedup operator library (SURVEY §7.4), parameterized and
   * composable — the query registry (graft.queries.DedupQueries) exposes
@@ -282,25 +285,30 @@ object Dedup {
     * "approxSimilarityJoin + connected components").
     *
     * Min-label propagation with pointer jumping: each round every node
-    * adopts the smallest label in its neighborhood, then compresses
-    * through its label's label (label(x) := label(label(x))) — the
-    * pointer-jumping step turns O(diameter) convergence into
+    * adopts the smallest of its own label, its neighbors' labels and its
+    * label's label (label(label(x)), read from the round's input labels)
+    * — the pointer-jumping term turns O(diameter) convergence into
     * O(log diameter), which matters on chain-shaped near-dup graphs
     * (embedding chains at a loose threshold), not just dense clusters.
-    * Every step is a distributed join/aggregate; the driver loop only
-    * reads each round's changed-label count. A round budget that runs
-    * out while labels still change throws an `IllegalStateException`
-    * naming `maxIter` and that count, instead of returning unconverged
-    * components.
+    * The driver loop only reads each round's changed-label count. A
+    * round budget that runs out while labels still change throws an
+    * `IllegalStateException` naming `maxIter` and that count, instead
+    * of returning unconverged components. An edge with a null endpoint
+    * is dropped.
+    *
+    * Scale shape: the symmetric edges are converted once into node →
+    * distinct neighbors, keyed by [[Rounds.partitioner]] and persisted;
+    * the labels are keyed the same way, so the labels ⋈ edges join is
+    * narrow. A round pays one re-key of the labels by label (the pointer
+    * jump), one `reduceByKey` of the offered labels, and ONE
+    * [[Rounds.checkpoint]] job, whose marker counts the labels that
+    * shrank. The start (own ids, or the seed) rides round 1's job.
     *
     * `roundPartitions` (or the [[Rounds.PartitionsKey]] session conf)
-    * sizes the per-round label exchange and the checkpointed state —
-    * the 1000× lever: ~128 MB per partition of round state. Default
-    * None = current behavior (`spark.sql.shuffle.partitions`). When
-    * set, the cached edge frame is also pre-partitioned on its join
-    * key, so the edge side of every round's join exchanges once at
-    * cache time instead of per round. Labels are exact longs — the
-    * result is identical under any partitioning.
+    * sizes the edge cache, the per-round shuffles and the checkpointed
+    * state — the 1000× lever: ~128 MB per partition of round state.
+    * Default None = `spark.sql.shuffle.partitions`. Labels are exact —
+    * the result is identical under any partitioning.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
       roundPartitions: Option[Int] = None): DataFrame =
@@ -323,93 +331,84 @@ object Dedup {
       seed: Option[DataFrame], maxIter: Int = 25,
       roundPartitions: Option[Int] = None): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    val rp = Rounds.resolve(pairs.sparkSession, roundPartitions)
-    // symmetrize in ONE pass over `pairs`: the union-of-two-selects form
-    // evaluates the (potentially expensive — q46/q83 feed the whole
-    // inverted-index jaccard join in here) pair plan twice when the cache
-    // below first materializes; explode duplicates each row map-side.
-    // With the knob set the cache is pre-partitioned on the per-round
-    // join key (b) at the knob's width, so every round's edges⋈labels
-    // join reads the cached layout instead of re-exchanging the edge
-    // side per round (guide §2.4) — the regime where labels are too big
-    // to broadcast. UNSET stays unpartitioned on purpose: an r21 A/B
-    // (isolated min-of-5, 9 CC queries at sf0.1) measured the
-    // unconditional default pre-partition at +7% locally — the cached
-    // fixed-width layout pins per-round joins to the session partition
-    // count where AQE would otherwise coalesce the tiny broadcast-side
-    // rounds, so the default keeps AQE's sizing and the knob owns the
-    // at-scale layout.
-    val sym = pairs
-      .select(explode(array(
-        struct(col("d1").as("a"), col("d2").as("b")),
-        struct(col("d2").as("a"), col("d1").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-    val edges = rp.map(p => sym.repartition(p, col("b")))
-      .getOrElse(sym)
-      .cache()
-    // localCheckpoint (eager) after every round: an iterative frame's
-    // logical plan otherwise nests all previous rounds — analysis cost
-    // and driver memory grow superlinearly with the iteration count, and
-    // any recompute cascades through the whole chain. Checkpointing
-    // truncates the lineage to the materialized blocks. Superseded
-    // checkpoints (one small label frame per round) are reclaimed by the
-    // ContextCleaner once unreferenced; the within-round `stepped` frame
-    // uses an ordinary cache and is dropped explicitly.
-    val initial = seed match {
-      case None =>
-        edges.select(col("a").as("id")).distinct()
-          .withColumn("component", col("id"))
-      case Some(st) =>
-        // seeded start: known nodes begin at their prior label (already
-        // the min of their prior class), new nodes at their own id —
-        // the star-collapse round every fold used to pay happens here,
-        // in the same single pass that builds the node set
-        edges.select(col("a").as("id")).distinct()
-          .join(st.select(col("id"), col("component").as("seed_c")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("seed_c"), col("id")).as("component"))
+    val spark = pairs.sparkSession
+    val p = Rounds.partitioner(spark, Rounds.resolve(spark, roundPartitions))
+    val (rows, t) = Rounds.endpoints(pairs, "d1", "d2")
+    val ord = ordering(t)
+    // the symmetric edge set as node -> distinct neighbors, keyed like
+    // the labels so every round's labels ⋈ edges join is narrow
+    val edges = Rounds.edgeCache(
+      rows.flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0)))), p)
+    try {
+      // the start needs no job of its own: round 1's job materializes it
+      // with the edge cache
+      var labels: RDD[(Any, Any)] = seed match {
+        case None =>
+          edges.mapPartitions(_.map { case (id, _) => (id, id: Any) }, preservesPartitioning = true)
+        case Some(st) =>
+          // seeded start: known nodes begin at their prior label (already
+          // the min of their prior class, never above their own id), new
+          // nodes at their own id — the star-collapse round every fold
+          // used to pay happens here
+          val known = st.select(col("id").cast(t), col("component").cast(t)).rdd
+            .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None else Some((r.get(0), r.get(1))))
+          edges.cogroup(known, p).mapPartitions(_.flatMap { case (id, (nbrs, seeded)) =>
+            if (nbrs.isEmpty) None else Some((id, seeded.foldLeft(id)(ord.min)))
+          }, preservesPartitioning = true)
+      }
+      var changed = 0L
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        val l = labels
+        // pointer jump on the round's input labels: re-keyed by label c,
+        // every id labeled c hears label(c) when that is smaller — chains
+        // halve every round, turning O(diameter) convergence into
+        // O(log diameter) on chain-shaped graphs
+        val jumps = l.map(_.swap).cogroup(l, p).flatMap { case (c, (ids, own)) =>
+          own.iterator.filter(ord.lt(_, c))
+            .flatMap(lc => ids.iterator.map(id => (id, (lc, null: Any))))
+        }
+        // min-label propagation: each node keeps its label (the row that
+        // carries it as `prev`) and offers it to every neighbor
+        val offers = l.join(edges).flatMap { case (b, (lb, nbrs)) =>
+          Iterator((b, (lb, lb))) ++ nbrs.iterator.map(a => (a, (lb, null: Any)))
+        }
+        // convergence is read off the checkpoint job itself: a marker
+        // counts the labels that shrank this round; `prev` feeds the
+        // marker only, the materialized state stays (id, component)
+        val next = Rounds.checkpoint(
+          offers.union(jumps).reduceByKey(p,
+            (x, y) => (ord.min(x._1, y._1), if (x._2 != null) x._2 else y._2)),
+          release = Seq(l))(
+          x => (x._1, x._2._1), sums = Seq(x => if (ord.lt(x._2._1, x._2._2)) 1.0 else 0.0))
+        changed = next.sums(0).toLong
+        converged = changed == 0L
+        labels = next.rdd
+        iter += 1
+      }
+      if (!converged) {
+        labels.unpersist(blocking = false)
+        throw new IllegalStateException(
+          s"connected components did not converge within maxIter=$maxIter rounds: " +
+            s"the last round still changed $changed labels")
+      }
+      Rounds.frame(spark, labels.map { case (id, c) => Row(id, c) },
+        ("id", t, true), ("component", t, true))
+    } finally edges.unpersist(blocking = false): Unit
+  }
+
+  /** The order Spark's `min` and `least` give external row values of
+    * type `t`: strings compare as UTF-8 bytes, every other orderable
+    * type by its Java `compareTo`. */
+  private def ordering(t: DataType): Ordering[Any] = t match {
+    case StringType => new Ordering[Any] {
+      def compare(x: Any, y: Any): Int = UTF8String.fromString(x.asInstanceOf[String])
+        .compareTo(UTF8String.fromString(y.asInstanceOf[String]))
     }
-    var labels = Rounds.shape(initial, col("id"), rp)
-      .localCheckpoint()
-    var changed = 0L
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.select(col("id"), col("component")), col("b") === col("id"))
-        .groupBy(col("a")).agg(min(col("component")).as("nbr_min"))
-      val stepped = labels
-        .join(neighborMin, col("id") === col("a"), "left")
-        .select(col("id"), col("component").as("prev"),
-          least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"))
-        .cache() // consumed twice by the jump join below; freed at round end
-      // pointer jump: follow the new label one hop (label(label(x))) —
-      // labels only ever shrink, so the composed label is still a
-      // reachable node and chains halve every round, turning O(diameter)
-      // convergence into O(log diameter) on chain-shaped graphs.
-      // Convergence is read off the checkpoint job itself: a marker
-      // counts the labels that shrank this round, so the loop runs ONE
-      // job chain per round instead of two (the r21 scaling block showed
-      // the whole CC family bound by round trips — 8v32 ratios 0.28-0.78 —
-      // and a count() job was a second full pass over the corpus-sized
-      // state per round). `prev` feeds the marker only; the
-      // materialized state stays (id, component).
-      val next = Rounds.checkpoint(stepped
-        .join(stepped.select(col("id").as("jid"), col("component").as("jcomp")),
-          col("component") === col("jid"), "left")
-        .select(col("id"), col("prev"),
-          least(col("component"), coalesce(col("jcomp"), col("component"))).as("component")),
-        col("id"), rp, sums = Seq(when(col("component") < col("prev"), 1.0)),
-        drop = Seq("prev"))
-      stepped.unpersist()
-      changed = next.sums(0).toLong
-      if (changed == 0L) converged = true else labels = next.df
-      iter += 1
+    case _ => new Ordering[Any] {
+      def compare(x: Any, y: Any): Int = x.asInstanceOf[Comparable[Any]].compareTo(y)
     }
-    edges.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge within maxIter=$maxIter rounds: " +
-        s"the last round still changed $changed labels")
-    labels.select(col("id"), col("component"))
   }
 
   /** Incremental component maintenance: fold a NEW batch of pair edges

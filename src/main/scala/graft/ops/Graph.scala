@@ -1,25 +1,31 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import scala.collection.mutable
+
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Distributed graph analytics beyond [[Dedup.connectedComponents]]:
   * fixed-iteration PageRank (the canonical "importance over a directed
   * graph" measure — public algorithm, Brin & Page 1998) with proper
   * dangling-mass redistribution.
   *
-  * Scale shape: every iteration is the rank/edge contribution join and
-  * one node-keyed aggregate of the contributions (map-side combined on
-  * the destination; the node base rides it, so there is no node-base
-  * join) — and one eager localCheckpoint of the node-sized rank frame,
-  * EVERY round. The only scalars the loop reads back, the node count
-  * and each round's dangling mass, are read off those checkpoint jobs
-  * by [[Rounds.checkpoint]] markers, so a round costs no job beyond its
-  * own materialization. The ranks frame stays node-sized, edges
-  * edge-sized; nothing corpus-wide is ever collected, and plan size and
-  * recompute cost are constant per iteration.
+  * Scale shape: the edges are converted ONCE into a node base keyed
+  * and partitioned like the rank state ([[Rounds.partitioner]]) and
+  * persisted, so every iteration's rank ⋈ base join is narrow. A round
+  * is one node-keyed `reduceByKey` of the contributions (map-side
+  * combined on the destination; each node also adds a zero share, so
+  * every node keeps its row) and one eager [[Rounds.checkpoint]] of the
+  * node-sized rank state — one Spark job and no generated code per
+  * round. The only scalars the loop reads back, the node count and each
+  * round's dangling mass, are read off those checkpoint jobs. The rank
+  * state stays node-sized, the base edge-sized; nothing corpus-wide is
+  * ever collected, and recompute cost is constant per iteration.
   *
   * Fixed iteration count rather than convergence detection keeps runs
   * deterministic and oracle-replayable; production callers pick iters
@@ -158,35 +164,16 @@ object Graph {
 
   /** PageRank over directed edges (src, dst): returns (node, rank) for
     * every node appearing as source or destination. Parallel edges are
-    * collapsed (simple-graph semantics). Dangling nodes (no out-edges)
-    * redistribute their mass uniformly each iteration, so total rank
-    * mass stays exactly 1 up to float addition. */
+    * collapsed (simple-graph semantics); an edge with a null endpoint is
+    * dropped. Dangling nodes (no out-edges) redistribute their mass
+    * uniformly each iteration, so total rank mass stays exactly 1 up to
+    * float addition. */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val rp = Rounds.resolve(edges.sparkSession)
-    // the iterative-access exception to the "bounded caches only"
-    // policy: every iteration re-reads the edges, so they persist
-    // (Dataset cache = MEMORY_AND_DISK — spills, never OOMs); the
-    // production alternative for edges past cluster disk is a one-time
-    // checkpoint to parquet, same access pattern. The edge cache is
-    // pre-partitioned on its per-round join key (src), so the
-    // contribution join exchanges edges ONCE here instead of every
-    // round (guide §2.4: two operations keyed the same way share one
-    // exchange).
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(col("src")).cache()
-    // node count and dangling-node count come off the base's checkpoint
-    val b = Rounds.checkpoint(outBase(e, lit(1.0)), col("node"), rp,
-      sums = Seq(when(col("out") === 0, 1.0)))
-    val n = b.rows.toDouble
-    rankRounds(b.df, lit(1.0 / n), b.sums(0) * (1.0 / n), iters, rp)(
-      ranks => ranks.filter(col("out") > 0)
-        .select(col("node").as("src"), (col("rank") / col("out")).as("share"))
-        .join(e, "src")
-        .select(col("dst").as("node"), col("share")),
-      (in, dangling) => lit((1.0 - damping) / n) + lit(damping) * (in + lit(dangling / n)))
+    val (rows, t) = Rounds.endpoints(edges, srcCol, dstCol)
+    uniformPageRank(edges, rows, t, weighted = false, iters, damping)
   }
 
   /** Edge-weighted PageRank: contributions split ∝ edge weight instead
@@ -207,26 +194,21 @@ object Graph {
       weightCol: String = "weight"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val rp = Rounds.resolve(edges.sparkSession)
-    // weight-summed edge frame, pre-partitioned on the per-round join
-    // key (src) so the contribution join exchanges edges once at cache
-    // time, not every round — same discipline as pageRank's edge cache
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("double").as("w"))
-      .filter(col("w") > 0) // also drops null weights
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .repartition(col("src")).cache()
-    val b = Rounds.checkpoint(outBase(e, col("w")), col("node"), rp,
-      sums = Seq(when(col("out") === 0, 1.0)))
-    val n = b.rows.toDouble
-    rankRounds(b.df, lit(1.0 / n), b.sums(0) * (1.0 / n), iters, rp)(
-      ranks => ranks.filter(col("out") > 0)
-        .select(col("node").as("src"), col("rank"), col("out"))
-        .join(e, "src")
-        .select(col("dst").as("node"), (col("rank") * col("w") / col("out")).as("share")),
-      (in, dangling) => lit((1.0 - damping) / n) + lit(damping) * (in + lit(dangling / n)))
+    val w = col(weightCol).cast("double")
+    val (rows, t) = Rounds.endpoints(edges.filter(w > 0), srcCol, dstCol, w) // drops null weights
+    uniformPageRank(edges, rows, t, weighted = true, iters, damping)
   }
+
+  /** [[pageRank]] and [[weightedPageRank]]: teleport uniform over the n
+    * nodes. n and the dangling-node count come off the base's
+    * checkpoint. */
+  private def uniformPageRank(edges: DataFrame, rows: RDD[Row], t: DataType,
+      weighted: Boolean, iters: Int, damping: Double): DataFrame =
+    withRankBase(edges, rows, weighted, None) { (b, p) =>
+      val n = b.rows.toDouble
+      rankFrame(edges, t, rankRounds(b.rdd, p, _ => 1.0 / n, b.sums(0) * (1.0 / n), iters)(
+        (in, _, dangling) => (1.0 - damping) / n + damping * (in + dangling / n)))
+    }
 
   /** Personalized PageRank: teleport mass goes to a SEED set instead of
     * uniformly everywhere — the "related to these items" ranking
@@ -238,81 +220,106 @@ object Graph {
     * seed distribution, the standard personalized formulation, so total
     * rank mass stays 1 and non-seed-reachable nodes decay to exactly 0.
     *
-    * Scale shape is [[pageRank]]'s plus one broadcast-sized left join
-    * marking the seeds in the node base — seeds are query-sized, never
-    * corpus-sized. */
+    * Scale shape is [[pageRank]]'s plus one query-sized shuffle of the
+    * seeds, co-grouped into the node base — seeds are query-sized,
+    * never corpus-sized. */
   def personalizedPageRank(edges: DataFrame, iters: Int, seeds: DataFrame,
       damping: Double = 0.85, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val rp = Rounds.resolve(edges.sparkSession)
-    // edge cache pre-partitioned on the per-round join key, as in
-    // pageRank
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(col("src")).cache()
-    val sd = seeds.toDF("node").distinct().withColumn("is_seed", lit(true))
+    val (rows, t) = Rounds.endpoints(edges, srcCol, dstCol)
+    val sd = seeds.toDF("node").select(col("node").cast(t).as("node"))
+      .filter(col("node").isNotNull).rdd.map(r => (r.get(0), true))
     // the seed count k and the dangling-seed count (round 1's dangling
     // mass, over k) come off the base's checkpoint
-    val b = Rounds.checkpoint(
-      outBase(e, lit(1.0)).join(broadcast(sd), Seq("node"), "left"), col("node"), rp,
-      sums = Seq(when(col("is_seed"), 1.0), when(col("is_seed") && col("out") === 0, 1.0)))
-    val k = b.sums(0)
-    require(k > 0, "no seed appears in the graph")
-    // static per-node teleport probability: 1/k on seeds, 0 elsewhere
-    val base = b.df.select(col("node"), col("out"),
-      when(col("is_seed"), lit(1.0 / k)).otherwise(lit(0.0)).as("tele"))
-    rankRounds(base, col("tele"), b.sums(1) * (1.0 / k), iters, rp)(
-      ranks => ranks.filter(col("out") > 0)
-        .select(col("node").as("src"), (col("rank") / col("out")).as("share"))
-        .join(e, "src")
-        .select(col("dst").as("node"), col("share")),
-      (in, dangling) => lit(1.0 - damping) * col("tele") +
-        lit(damping) * (in + lit(dangling) * col("tele")))
+    withRankBase(edges, rows, weighted = false, Some(sd)) { (b, p) =>
+      val k = b.sums(1)
+      require(k > 0, "no seed appears in the graph")
+      // static per-node teleport probability: 1/k on seeds, 0 elsewhere
+      val tele = (seed: Boolean) => if (seed) 1.0 / k else 0.0
+      rankFrame(edges, t, rankRounds(b.rdd, p, nd => tele(nd.seed), b.sums(2) * (1.0 / k), iters)(
+        (in, seed, dangling) =>
+          (1.0 - damping) * tele(seed) + damping * (in + dangling * tele(seed))))
+    }
   }
 
-  /** The PageRank node base in ONE aggregate: each edge tags its src
-    * with `out` (1 per edge, or its weight) and its dst with 0, summed
-    * per node into (node, out) — the out-degree or out-weight, with
-    * 0 marking a dangling node. */
-  private def outBase(e: DataFrame, out: Column): DataFrame =
-    e.select(col("src").as("node"), out.as("out"))
-      .union(e.select(col("dst").as("node"), lit(0.0).as("out")))
-      .groupBy(col("node")).agg(sum(col("out")).as("out"))
+  /** A PageRank node: its out-edges and their weights, `out` their sum
+    * (the out-degree or out-weight; 0 marks a dangling node), and
+    * whether it is a personalization seed. */
+  private final case class RankNode(dst: Array[Any], w: Array[Double], out: Double,
+      seed: Boolean)
 
-  /** The round loop shared by the PageRank variants. `base` is the
-    * materialized node base (node, out, ...); `shares` maps the rank
-    * state to one (node, share) row per edge, keyed by its destination;
-    * `rank` gives the next rank from the inbound sum and the dangling
-    * mass. The base rows join the shares' aggregate with a zero share,
-    * so every node keeps its row without a node-base join. Each round
-    * is ONE eager [[Rounds.checkpoint]] of the node-sized rank frame,
-    * and its dangling mass (the ranks of out = 0 nodes) is read off
-    * that job for the next round, which takes it as a literal: no
-    * scalar aggregate job, no broadcast cross join. The checkpoint also
-    * keeps the lineage flat, so plan size and recompute cost are
-    * constant per iteration (the rank state is read twice per round,
-    * which would otherwise nest 2^k recomputes by round k). */
-  private def rankRounds(base: DataFrame, rank0: Column, dangling0: Double,
-      iters: Int, rp: Option[Int])(shares: DataFrame => DataFrame,
-      rank: (Column, Double) => Column): DataFrame = {
-    val static = base.columns.filter(_ != "node").toSeq
-    val zero = base.withColumn("share", lit(0.0))
-    var ranks = base.withColumn("rank", rank0)
+  /** Build, materialize and finally release the PageRank node base, keyed
+    * and partitioned like every round: ONE shuffle of the edges, each
+    * edge tagging its src with the out-edge and its dst with a bare entry
+    * (so a node that is only a destination is dangling), repeated
+    * (src, dst) edges collapsed (`weighted`: their weights summed). The
+    * base's checkpoint job reads the node count and the sums [dangling
+    * nodes, seeds, dangling seeds]; `seeds` are co-grouped in when set. */
+  private def withRankBase(edges: DataFrame, rows: RDD[Row], weighted: Boolean,
+      seeds: Option[RDD[(Any, Boolean)]])(
+      body: (Rounds.Round[(Any, RankNode)], Partitioner) => DataFrame): DataFrame = {
+    val p = Rounds.partitioner(edges.sparkSession, Rounds.resolve(edges.sparkSession))
+    val add = (m: mutable.LinkedHashMap[Any, Double], d: Any, w: Double) =>
+      m(d) = if (weighted) m.getOrElse(d, 0.0) + w else 1.0
+    val nodes = rows
+      .flatMap { r =>
+        Iterator((r.get(0), (r.get(1), if (weighted) r.getDouble(2) else 1.0)), (r.get(1), null))
+      }
+      .aggregateByKey(mutable.LinkedHashMap.empty[Any, Double], p)(
+        (m, e) => { if (e != null) add(m, e._1, e._2); m },
+        (m, o) => { o.foreach { case (d, w) => add(m, d, w) }; m })
+      .mapValues(m => RankNode(m.keys.toArray, m.values.toArray, m.values.sum, seed = false))
+    val base = seeds.fold(nodes)(sd => nodes.cogroup(sd, p).flatMapValues {
+      case (nd, s) => nd.headOption.map(_.copy(seed = s.nonEmpty))
+    })
+    val b = Rounds.checkpoint(base)(identity, sums = Seq(
+      x => if (x._2.out == 0) 1.0 else 0.0,
+      x => if (x._2.seed) 1.0 else 0.0,
+      x => if (x._2.seed && x._2.out == 0) 1.0 else 0.0))
+    try body(b, p)
+    finally b.rdd.unpersist(blocking = false): Unit
+  }
+
+  /** The round loop shared by the PageRank variants, on the materialized
+    * node `base`. Each round joins the rank state to the base narrowly
+    * (both keyed by `p`), emits one share per out-edge plus a zero share
+    * that keeps every node's row, and sums them per node in ONE
+    * `reduceByKey`; `rank` gives the next rank from the inbound sum, the
+    * seed flag and the dangling mass. The round's [[Rounds.checkpoint]]
+    * is its only job, and its dangling mass (the ranks of out = 0 nodes)
+    * is read off that job for the next round. The superseded state is
+    * released as soon as the next one is materialized. */
+  private def rankRounds(base: RDD[(Any, RankNode)], p: Partitioner, rank0: RankNode => Double,
+      dangling0: Double, iters: Int)(
+      rank: (Double, Boolean, Double) => Double): RDD[(Any, Double)] = {
+    var ranks: RDD[(Any, Double)] = base.mapValues(rank0)
     var dangling = dangling0
     for (_ <- 1 to iters) {
+      val d = dangling
       val r = Rounds.checkpoint(
-        zero.unionByName(shares(ranks), allowMissingColumns = true)
-          .groupBy(col("node"))
-          .agg(sum(col("share")).as("in_sum"), static.map(c => max(col(c)).as(c)): _*)
-          .select(col("node") +: static.map(col) :+
-            rank(col("in_sum"), dangling).as("rank"): _*),
-        col("node"), rp, sums = Seq(when(col("out") === 0, col("rank"))))
-      ranks = r.df
+        ranks.join(base)
+          .flatMap { case (node, (rk, nd)) =>
+            Iterator((node, (0.0, nd.out, nd.seed))) ++
+              nd.dst.indices.iterator.map(j => (nd.dst(j), (rk * nd.w(j) / nd.out, -1.0, false)))
+          }
+          .reduceByKey(p, (x, y) => (x._1 + y._1, math.max(x._2, y._2), x._3 || y._3))
+          .mapValues { case (in, out, seed) => (rank(in, seed, d), out) },
+        release = Seq(ranks))(
+        x => (x._1, x._2._1), sums = Seq(x => if (x._2._2 == 0) x._2._1 else 0.0))
+      ranks = r.rdd
       dangling = r.sums(0)
     }
-    ranks.select(col("node"), col("rank"))
+    // with no round the ranks are a view of the base, which the caller
+    // releases: materialize them on their own
+    if (iters == 0) Rounds.checkpoint(ranks)(identity).rdd else ranks
   }
+
+  /** The (node, rank) frame over the final rank state. */
+  private def rankFrame(edges: DataFrame, t: DataType, ranks: RDD[(Any, Double)]): DataFrame =
+    Rounds.frame(edges.sparkSession, ranks.map { case (n, r) => Row(n, r) },
+      ("node", t, true), ("rank", DoubleType, true))
 
   /** Synchronous label propagation (community detection — the Raghavan
     * et al. 2007 algorithm, public): every node starts labeled with its
@@ -621,41 +628,68 @@ object Graph {
     * boundary, the repo's standard reassociation exposure (the q211
     * convention), not a bit-equality guarantee.
     *
-    * Scale shape per round: two edge-keyed join+aggregate passes
-    * (map-side combined, node-keyed — never all-pairs). Each half-step
-    * ends in ONE eager [[Rounds.checkpoint]] of its raw scores whose
-    * max marker is the normalizer, applied as a literal in a projection
-    * over the materialized blocks — no 1-row max frame, no broadcast
-    * cross join. Plan size and recompute cost stay constant in `iters`,
-    * and the returned frames read only checkpointed blocks — the edge
-    * cache is then released in a finally without robbing callers of its
-    * benefit or leaking it on failure. Returns (hubs (u, h),
+    * Scale shape: the distinct edges are keyed twice, by user and by
+    * item, each partitioned like the score state and persisted, so each
+    * half-step's scores ⋈ edges join is narrow and the half-step is one
+    * `reduceByKey` (map-side combined, node-keyed — never all-pairs) and
+    * ONE eager [[Rounds.checkpoint]] of the raw scores, whose max marker
+    * is the normalizer. Normalizing (Spark `round`'s HALF_UP at 6 dp,
+    * [[round6]]) runs lazily over the materialized blocks, so a
+    * half-step is one Spark job. An edge with a null endpoint is
+    * dropped. The returned frames read only checkpointed blocks, so the
+    * edge caches are released in a finally, and each superseded score
+    * state as soon as the next is materialized. Returns (hubs (u, h),
     * authorities (i, a)) after `iters` full rounds. */
   def hits(edges: DataFrame, uCol: String = "u", iCol: String = "i",
       iters: Int = 2): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val rp = Rounds.resolve(edges.sparkSession)
+    val spark = edges.sparkSession
+    val p = Rounds.partitioner(spark, Rounds.resolve(spark))
     val e = edges.select(col(uCol).as("u"), col(iCol).as("i"))
-      .distinct().cache()
-    // one half-step: materialize the raw scores, max-normalize to 6dp
-    def normalized(raw: DataFrame, key: String, score: String): DataFrame = {
-      val r = Rounds.checkpoint(raw, col(key), rp, max = Some(col("raw")))
-      r.df.select(col(key), round(col("raw") / lit(r.max), 6).as(score))
+    val Array(ut, it) = e.schema.fields.map(_.dataType)
+    val byU = Rounds.edgeCache(e.filter(col("u").isNotNull && col("i").isNotNull).rdd
+      .map(r => (r.get(0), r.get(1))), p)
+    // re-keyed from the user-keyed cache: the input plan runs once
+    val byI = Rounds.edgeCache(byU.flatMap { case (u, is) => is.iterator.map((_, u)) }, p)
+    // one half-step: sum the scores over the edges into the raw scores of
+    // the other side, materialized with their max
+    def half(scores: RDD[(Any, Double)], adj: RDD[(Any, Array[Any])],
+        release: Seq[RDD[_]]): Rounds.Round[(Any, Double)] =
+      Rounds.checkpoint(
+        scores.join(adj)
+          .flatMap { case (_, (s, to)) => to.iterator.map(x => (x, s)) }
+          .reduceByKey(p, _ + _),
+        release)(identity, max = Some(_._2))
+    // max-normalized to 6 dp, applied lazily over the materialized blocks
+    def normalized(r: Rounds.Round[(Any, Double)]): RDD[(Any, Double)] = {
+      val m = r.max
+      r.rdd.mapValues(x => round6(x / m))
     }
     try {
-      var hub = e.select(col("u")).distinct().withColumn("h", lit(1.0))
-      var auth: DataFrame = null
+      var h: RDD[(Any, Double)] = byU.mapValues(_ => 1.0)
+      var hub, auth: Rounds.Round[(Any, Double)] = null
+      var superseded: Seq[RDD[_]] = Nil
       for (_ <- 1 to iters) {
-        auth = normalized(
-          e.join(hub, "u").groupBy(col("i")).agg(sum(col("h")).as("raw")), "i", "a")
-        hub = normalized(
-          e.join(auth, "i").groupBy(col("u")).agg(sum(col("a")).as("raw")), "u", "h")
+        auth = half(h, byU, superseded)
+        hub = half(normalized(auth), byI, Nil)
+        h = normalized(hub)
+        superseded = Seq(auth.rdd, hub.rdd)
       }
-      (hub, auth)
+      def scores(r: Rounds.Round[(Any, Double)]): RDD[Row] =
+        normalized(r).map { case (k, v) => Row(k, v) }
+      (Rounds.frame(spark, scores(hub), ("u", ut, true), ("h", DoubleType, true)),
+        Rounds.frame(spark, scores(auth), ("i", it, true), ("a", DoubleType, true)))
     } finally {
-      e.unpersist(blocking = false): Unit
+      byU.unpersist(blocking = false)
+      byI.unpersist(blocking = false): Unit
     }
   }
+
+  /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
+    * form of `x` (not on its binary value); NaN and infinities pass. */
+  private[graft] def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
   /** k-core membership by bounded-round peeling (Seidman 1983; the
     * distributed "peel degree-deficient nodes in rounds" formulation —
@@ -670,58 +704,59 @@ object Graph {
     * Fixed `maxRounds` (like [[pageRank]]'s fixed iterations) keeps the
     * result deterministic and oracle-replayable even when peeling
     * hasn't converged; synchronous rounds mean the result is
-    * partition-order-independent. The loop stops early once a round
-    * peels nothing, so callers who need the true core pass maxRounds
-    * generous (peeling converges in O(diameter)-ish rounds in
-    * practice; every round strictly shrinks the node set or stops).
+    * partition-order-independent. The loop stops early once no node
+    * would peel (that round would be an identity), so callers who need
+    * the true core pass maxRounds generous (peeling converges in
+    * O(diameter)-ish rounds in practice; every round strictly shrinks
+    * the node set or stops). Self-loops and edges with a null endpoint
+    * are dropped.
     *
-    * Scale shape per round: one degree aggregate over the surviving
-    * edge frame (map-side combined, node-keyed) and two semi-joins
-    * filtering edges to surviving endpoints — all edge/node-sized,
-    * nothing corpus-wide on the driver; edges materialize per round
-    * (the same consumed-twice/lineage discipline as [[pageRank]]). */
+    * Scale shape: the state is the surviving simple graph as node →
+    * distinct neighbors, keyed by [[Rounds.partitioner]]; a node's
+    * degree is its neighbor count. A round shuffles only the peeled
+    * nodes' edges (each peeled node tells its neighbors), co-groups them
+    * narrowly into the state and materializes it with ONE
+    * [[Rounds.checkpoint]] — one Spark job per round — whose marker
+    * counts the nodes the next round would peel. All edge/node-sized,
+    * nothing corpus-wide on the driver. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int,
       aCol: String = "u1", bCol: String = "u2"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val rp = Rounds.resolve(edges.sparkSession)
-    // Early exit once a peel drops nothing (r22): peeling is monotone —
-    // a round that removes no edge removes no node, so every later
-    // round is an identity and the registered fixed `maxRounds` (the
-    // determinism contract) only bounds the loop; the OUTPUT of exiting
-    // early is bit-identical (measured on q144's graph at sf0.1: the
-    // peel converges after round 1, so rounds 2-4 were pure no-op
-    // jobs). The edge count is the row count of each round's own
-    // [[Rounds.checkpoint]] — no extra job, and exact (result-stage
-    // marker), which an equality test needs. The checkpoint also
-    // avoids the 2^k recompute nesting: e is consumed twice per round
-    // (degree agg + both semi-joins share it).
-    var cur = Rounds.checkpoint(
-      edges.select(col(aCol).as("a"), col(bCol).as("b"))
-        .filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct(), col("a"), rp)
+    val spark = edges.sparkSession
+    val p = Rounds.partitioner(spark, Rounds.resolve(spark))
+    val (rows, t) = Rounds.endpoints(edges, aCol, bCol)
+    // the simple undirected graph as node -> distinct neighbors, self-loops
+    // dropped; a node's degree is its neighbor count
+    val und = rows.flatMap { r =>
+      val (a, b) = (r.get(0), r.get(1))
+      if (a == b) Iterator.empty else Iterator((a, b), (b, a))
+    }
+    // the marker counts the nodes the NEXT peel would drop, so a state
+    // that no round can change ends the loop without running that round
+    // (peeling is monotone: a round that drops no node is an identity)
+    val deficient: ((Any, Array[Any])) => Double = x => if (x._2.length < k) 1.0 else 0.0
+    var cur = Rounds.checkpoint(Rounds.adjacency(und, p))(identity, sums = Seq(deficient))
     var r = 1
-    var converged = false
-    while (r <= maxRounds && !converged) {
-      val e = cur.df
-      val deg = e.select(col("a").as("node")).union(e.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      val keep = deg.filter(col("degree") >= k).select(col("node"))
-      val next = Rounds.checkpoint(e
-        .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")), col("a"), rp)
-      converged = next.rows == cur.rows
-      cur = next
+    while (r <= maxRounds && cur.sums(0) > 0) {
+      val s = cur.rdd
+      // each dropped node tells its neighbors, the only rows that move
+      val gone = s.filter(_._2.length < k)
+        .flatMap { case (v, nbrs) => nbrs.iterator.map(w => (w, v)) }
+      cur = Rounds.checkpoint(
+        s.cogroup(gone, p).flatMapValues { case (own, lost) =>
+          own.headOption.filter(_.length >= k).map { nbrs =>
+            val drop = lost.toSet
+            nbrs.filterNot(drop)
+          }.filter(_.nonEmpty)
+        },
+        release = Seq(s))(identity, sums = Seq(deficient))
       r += 1
     }
     // degrees of the subgraph as left after exactly maxRounds peels
-    // (early exit only skips identity rounds) — no trailing filter, so
-    // the oracle replays the identical rounds
-    val e = cur.df
-    e.select(col("a").as("node")).union(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+    // (the early exit only skips identity rounds)
+    Rounds.frame(spark, cur.rdd.map { case (v, nbrs) => Row(v, nbrs.length.toLong) },
+      ("node", t, true), ("degree", LongType, false))
   }
 
   /** Per-node triangle counts and local clustering coefficient over an

@@ -2,8 +2,15 @@ package graft.ops
 
 import java.math.BigDecimal
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{array, col}
+import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.AccumulatorV2
 
 /** Round-state partition sizing for the iterative operators
@@ -29,26 +36,35 @@ import org.apache.spark.util.AccumulatorV2
   *    ([[Dedup.connectedComponents]]); the argument wins over the
   *    conf.
   *
-  * When active, the round-state frame is hash-repartitioned on its
-  * key before each materialization, so the checkpointed state AND the
-  * next round's join exchange inherit the requested width (a cached
-  * edge frame partitioned on its join key is likewise exchanged once,
-  * not per round). Exact-arithmetic rounds (component min-labels, BFS
-  * min-dists, k-core peels — all longs) are identical under any
-  * partitioning; the float-summing iteratives (PageRank, HITS) can
-  * move in the last ulp exactly as they would under any change of
-  * cluster width — the same caveat `spark.sql.shuffle.partitions`
-  * already carries.
+  * The RDD round loops (the PageRank family and [[Graph.hits]],
+  * [[Graph.kCore]], [[Dedup.connectedComponents]] and its seeded form)
+  * key their edges and their round state by ONE `HashPartitioner`
+  * ([[partitioner]]): the knob's width when set, else
+  * `spark.sql.shuffle.partitions`. Each call converts its input frame
+  * once; the loop-invariant edges are keyed, partitioned once and
+  * persisted, so the state ⋈ edges join of every round is narrow. A
+  * round then pays one `reduceByKey` shuffle (the CC pointer jump adds
+  * one re-key) and one job, and the result becomes a frame once. LPA,
+  * BFS and the shortest-path tree stay on DataFrames: when the knob is
+  * set, [[shape]] hash-repartitions their state frame on its key before
+  * each materialization. Exact-arithmetic rounds (component min-labels,
+  * BFS min-dists, k-core peels) are identical under any partitioning;
+  * the float-summing iteratives (PageRank, HITS) can move in the last
+  * ulp exactly as they would under any change of cluster width — the
+  * same caveat `spark.sql.shuffle.partitions` already carries.
   *
-  * [[checkpoint]] is the one materialization point of a round: it
-  * shapes the state, checkpoints it eagerly and returns the round's
-  * scalars (row count, exact sums, max) read off that same job, so a
-  * loop pays no extra job for its node count, dangling mass, convergence
-  * count or normalizer. The marker contract:
-  *  - markers are evaluated in a projection ABOVE the [[shape]]
-  *    exchange, so they run in the RESULT stage of the checkpoint job,
-  *    where Spark applies each task's accumulator update exactly once
-  *    (a retried map-stage task would count its rows twice);
+  * [[checkpoint]] is the one materialization point of an RDD round: a
+  * marker pass over the state, an eager localCheckpoint and a count —
+  * one job — returning the round's scalars (row count, exact sums, max)
+  * read off that same job, so a loop pays no extra job for its node
+  * count, dangling mass, convergence count or normalizer. The marker
+  * contract:
+  *  - markers run in a `mapPartitions(preservesPartitioning = true)`
+  *    after the round's last shuffle, so they run in the RESULT stage
+  *    of the checkpoint job, where Spark applies each task's
+  *    accumulator update exactly once (a retried map-stage task would
+  *    count its rows twice), and the state keeps its partitioner;
+  *  - the row count is the job's own count;
   *  - sums are exact: every double is added as a `BigDecimal`, so the
   *    value does not depend on partitioning, task order or merge order
   *    and is rounded to a double once, at the end;
@@ -56,6 +72,10 @@ import org.apache.spark.util.AccumulatorV2
   *    accumulators, so concurrent loops on one session (q145 runs
   *    PageRank and k-core on parallel threads) cannot see each
   *    other's rows.
+  * A loop hands the state a round supersedes to `release`, which
+  * unpersists it once the new round is materialized, and unpersists its
+  * edges when it returns: a finished call keeps only the blocks its
+  * result reads.
   */
 object Rounds {
 
@@ -82,48 +102,75 @@ object Rounds {
     v
   }
 
-  /** Hash-repartition `df` on `key` iff the knob is active. */
-  def shape(df: DataFrame, key: Column, n: Option[Int]): DataFrame =
-    n.map(p => df.repartition(p, key)).getOrElse(df)
-
-  /** Conf-only form for ops without an explicit argument (the Graph
-    * iteratives): shape by the session conf, or pass through. */
+  /** Hash-repartition `df` on `key` iff the session conf sets the knob
+    * (the DataFrame loops: LPA, BFS, SPT), else pass it through. */
   def shape(df: DataFrame, key: Column): DataFrame =
-    shape(df, key, resolve(df.sparkSession))
+    resolve(df.sparkSession).map(p => df.repartition(p, key)).getOrElse(df)
+
+  /** The partitioner every RDD round loop keys its edges and its round
+    * state by: [[resolve]]'s width if set, else
+    * `spark.sql.shuffle.partitions`. Two RDDs keyed by it join narrowly. */
+  def partitioner(spark: SparkSession, n: Option[Int]): HashPartitioner =
+    new HashPartitioner(n.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt))
 
   /** A round's materialized state plus the scalars its checkpoint job
-    * read off the rows: the row count, one exact sum per `sums` column
-    * and the max of the `max` column (nulls skipped; -Infinity when the
-    * max saw no value). */
-  final case class Round(df: DataFrame, rows: Long, sums: IndexedSeq[Double], max: Double)
+    * read off the rows: the row count, one exact sum per `sums` function
+    * and the max of the `max` function (-Infinity when no row was
+    * marked). */
+  final case class Round[S](rdd: RDD[S], rows: Long, sums: IndexedSeq[Double], max: Double)
 
-  /** Shape `df` on `key` (see [[shape]]), add the markers above that
-    * exchange, and localCheckpoint eagerly — one job chain for the
-    * state and all of its scalars. `drop` names columns the markers
-    * read but the checkpointed state leaves out. */
-  def checkpoint(df: DataFrame, key: Column, n: Option[Int],
-      sums: Seq[Column] = Nil, max: Option[Column] = None,
-      drop: Seq[String] = Nil): Round = {
-    val sc = df.sparkSession.sparkContext
-    val rows = sc.longAccumulator("graft.round.rows")
-    val totals = sums.map(_ => new ExactSum)
-    val top = new Max
-    (totals ++ max.map(_ => top)).foreach(sc.register(_, "graft.round.marks"))
-    // one marker column per scalar, each a side-effecting udf that is
-    // nondeterministic so the optimizer never duplicates, reorders or
-    // constant-folds it; a primitive-typed udf is skipped on null input
-    def fold(acc: AccumulatorV2[Double, Double], c: Column): Column =
-      udf((x: Double) => { acc.add(x); true }).asNondeterministic()(c.cast("double"))
-    val markers = udf(() => { rows.add(1L); true }).asNondeterministic()() +:
-      (sums.zip(totals).map { case (c, acc) => fold(acc, c) } ++ max.map(fold(top, _)))
-    val names = markers.indices.map(i => s"_round_mark$i")
-    val shaped = shape(df, key, n)
-    val keep = shaped.columns.toSeq.filterNot(drop.contains).map(c => col(c))
-    val state = shaped
-      .select(keep ++ markers.zip(names).map { case (m, name) => m.as(name) }: _*)
-      .localCheckpoint(eager = true)
-    Round(state.drop(names: _*), rows.value, totals.map(_.value).toIndexedSeq, top.value)
+  /** Materialize one round: mark each row of `state`, keep `keep` of it,
+    * localCheckpoint, and count — exactly one Spark job for the state
+    * and all of its scalars. `release` names superseded states, which
+    * are unpersisted (non-blocking) once this one is materialized.
+    * `keep` must not change a row's key: the marker pass preserves
+    * `state`'s partitioner, so the next round still joins it narrowly. */
+  def checkpoint[T, S: ClassTag](state: RDD[T], release: Seq[RDD[_]] = Nil)(keep: T => S,
+      sums: Seq[T => Double] = Nil, max: Option[T => Double] = None): Round[S] = {
+    // fresh accumulators per call: concurrent loops on one session (q145
+    // runs PageRank and k-core on parallel threads) never share one
+    val marks: Seq[(T => Double, AccumulatorV2[Double, Double])] =
+      sums.map(_ -> new ExactSum) ++ max.map(_ -> new Max)
+    marks.foreach { case (_, acc) => state.sparkContext.register(acc, "graft.round.marks") }
+    val kept = state.mapPartitions(_.map { x =>
+      marks.foreach { case (f, acc) => acc.add(f(x)) }
+      keep(x)
+    }, preservesPartitioning = true).localCheckpoint()
+    val rows = kept.count()
+    release.foreach(_.unpersist(blocking = false))
+    val values = marks.map(_._2.value)
+    Round(kept, rows, values.take(sums.size).toIndexedSeq,
+      if (max.isEmpty) Double.NegativeInfinity else values.last)
   }
+
+  /** `a` and `b` of `df` cast to their common type (the type a union of
+    * the two columns takes), plus `extra` columns, as an RDD of rows;
+    * a row with a null endpoint is dropped. Returns the common type too. */
+  private[ops] def endpoints(df: DataFrame, a: String, b: String,
+      extra: Column*): (RDD[Row], DataType) = {
+    val t = df.select(array(col(a), col(b))).schema.head.dataType
+      .asInstanceOf[ArrayType].elementType
+    val rows = df.select(col(a).cast(t).as("_a") +: col(b).cast(t).as("_b") +: extra: _*)
+      .filter(col("_a").isNotNull && col("_b").isNotNull)
+    (rows.rdd, t)
+  }
+
+  /** A frame over a round state's rows. */
+  private[ops] def frame(spark: SparkSession, rows: RDD[Row],
+      fields: (String, DataType, Boolean)*): DataFrame =
+    spark.createDataFrame(rows,
+      StructType(fields.map { case (n, t, nullable) => StructField(n, t, nullable) }))
+
+  /** Per-key distinct neighbor arrays, keyed and partitioned by `p`: one
+    * shuffle of `pairs`. */
+  private[ops] def adjacency(pairs: RDD[(Any, Any)], p: Partitioner): RDD[(Any, Array[Any])] =
+    pairs.aggregateByKey(mutable.LinkedHashSet.empty[Any], p)(_ += _, _ ++= _)
+      .mapValues(_.toArray)
+
+  /** [[adjacency]], persisted: the loop-invariant edge side of every
+    * round's join. Callers unpersist it when the loop ends. */
+  private[ops] def edgeCache(pairs: RDD[(Any, Any)], p: Partitioner): RDD[(Any, Array[Any])] =
+    adjacency(pairs, p).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Exact double sum: every term is added as a `BigDecimal`, so the
     * value is the same for any order of adds and merges, rounded to a
