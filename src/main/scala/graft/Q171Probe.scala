@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * columns; string buffers aren't hash-supported, so the whole aggregate
   * falls to SortAggregate (a per-partition sort of the feed at scale).
   * The candidate replacement is the repo's proven typed-Aggregator
-  * pattern (q263 TripletPick, LexMin2): `groupByKey(key).reduceGroups
+  * pattern (q263 TripletPick, KMeans.ArgMin): `groupByKey(key).reduceGroups
   * ((a, _) => a)` keeps whole rows in an ObjectHashAggregate with
   * map-side combine — no sort, but per-row object serialization both
   * ways across the typed boundary.

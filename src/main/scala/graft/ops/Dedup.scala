@@ -304,15 +304,14 @@ object Dedup {
     * [[Rounds.checkpoint]] job, whose marker counts the labels that
     * shrank. The start (own ids, or the seed) rides round 1's job.
     *
-    * `roundPartitions` (or the [[Rounds.PartitionsKey]] session conf)
-    * sizes the edge cache, the per-round shuffles and the checkpointed
-    * state — the 1000× lever: ~128 MB per partition of round state.
-    * Default None = `spark.sql.shuffle.partitions`. Labels are exact —
-    * the result is identical under any partitioning.
+    * The [[Rounds.PartitionsKey]] session conf sizes the edge cache,
+    * the per-round shuffles and the checkpointed state — the 1000×
+    * lever: ~128 MB per partition of round state. Unset =
+    * `spark.sql.shuffle.partitions`. Labels are exact — the result is
+    * identical under any partitioning.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      roundPartitions: Option[Int] = None): DataFrame =
-    connectedComponentsFrom(pairs, None, maxIter, roundPartitions)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponentsFrom(pairs, None, maxIter)
 
   /** [[connectedComponents]] with an optional SEED labeling: nodes
     * present in `seed` (id, component) start from their seeded label
@@ -328,11 +327,10 @@ object Dedup {
     * consuming the first propagation round of every fold (r22, VERDICT
     * item 1 — q304's three chained folds). */
   private[graft] def connectedComponentsFrom(pairs: DataFrame,
-      seed: Option[DataFrame], maxIter: Int = 25,
-      roundPartitions: Option[Int] = None): DataFrame = {
+      seed: Option[DataFrame], maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val spark = pairs.sparkSession
-    val p = Rounds.partitioner(spark, Rounds.resolve(spark, roundPartitions))
+    val p = Rounds.partitioner(spark)
     val (rows, t) = Rounds.endpoints(pairs, "d1", "d2")
     val ord = ordering(t)
     // the symmetric edge set as node -> distinct neighbors, keyed like

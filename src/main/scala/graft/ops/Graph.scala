@@ -4,11 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType,
+  NumericType, ShortType}
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph analytics beyond [[Dedup.connectedComponents]]:
   * fixed-iteration PageRank (the canonical "importance over a directed
@@ -32,29 +32,6 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * by the usual ~log(N) guidance or wrap this in a delta check.
   */
 object Graph {
-
-  /** O(1)-state (cnt DESC, label ASC) argmax over (cnt, label) longs —
-    * the LPA winner rule as a typed Aggregator so the per-node vote
-    * plans as an ObjectHashAggregate (hash-based, map-side combined,
-    * the [[GroupTopK]] machinery) rather than the SortAggregate that
-    * `min(struct(-cnt, label))` falls to (struct aggregation buffers
-    * aren't hash-supported) or a row_number window whose per-node
-    * partition a celebrity hub's degree would bound. Counts stay
-    * integral end to end — no Double score, no 2^53 precision cliff.
-    * Zero buffer is (cnt = -1) — real counts are >= 1, and groups only
-    * exist for nodes with at least one labeled neighbor, so the
-    * sentinel never escapes finish(). */
-  private[ops] final class MajorityVote
-      extends Aggregator[(Long, Long), (Long, Long), Long] {
-    @inline private def best(a: (Long, Long), b: (Long, Long)): (Long, Long) =
-      if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b
-    override def zero: (Long, Long) = (-1L, Long.MaxValue)
-    override def reduce(b: (Long, Long), x: (Long, Long)): (Long, Long) = best(b, x)
-    override def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) = best(a, b)
-    override def finish(b: (Long, Long)): Long = b._2
-    override def bufferEncoder: Encoder[(Long, Long)] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Long] = ExpressionEncoder()
-  }
 
   /** Bounded CO-ACTIVITY edge builder: undirected user–user edges from
     * shared (blockKey) membership, with a per-block CONCURRENCY CAP —
@@ -260,7 +237,7 @@ object Graph {
   private def withRankBase(edges: DataFrame, rows: RDD[Row], weighted: Boolean,
       seeds: Option[RDD[(Any, Boolean)]])(
       body: (Rounds.Round[(Any, RankNode)], Partitioner) => DataFrame): DataFrame = {
-    val p = Rounds.partitioner(edges.sparkSession, Rounds.resolve(edges.sparkSession))
+    val p = Rounds.partitioner(edges.sparkSession)
     val add = (m: mutable.LinkedHashMap[Any, Double], d: Any, w: Double) =>
       m(d) = if (weighted) m.getOrElse(d, 0.0) + w else 1.0
     val nodes = rows
@@ -329,86 +306,79 @@ object Graph {
     * LPA's majority rule finds the DENSE regions inside a component.
     * Fixed iteration count + deterministic tie-break keep runs
     * reproducible and oracle-replayable (classic LPA's random order is
-    * exactly what a distributed engine can't promise).
+    * exactly what a distributed engine can't promise). Self-loops,
+    * repeated pairs and edges with a null endpoint are dropped.
     *
-    * Scale shape per round: one edge-keyed join labels→neighbors, one
-    * (node, label) map-side-combined count, and a per-node argmax as a
-    * HASH AGGREGATE — the O(1)-state [[MajorityVote]] Aggregator picks
-    * the (cnt DESC, label ASC) winner with map-side partial combine
-    * and no sort, so a celebrity hub with millions of distinct
-    * neighbor labels is reduced incrementally instead of materialized
-    * and sorted inside one window partition (the straggler shape
-    * [[GroupTopK]]'s scaladoc warns about). Labels materialize every
-    * round (the same consumed-twice/lineage discipline as
-    * [[pageRank]]). Node ids must be long-typed (they double as
-    * labels inside the integer-exact vote buffer). */
+    * Scale shape: the edges are converted once into the simple
+    * undirected graph as node → distinct neighbors, keyed like the
+    * labels ([[Rounds.edgeCache]]), so every round's labels ⋈ neighbors
+    * join is narrow. A round sends each label to the node's neighbors,
+    * counts the offered labels per node in ONE map-side-combined reduce
+    * — a node's vote state is its distinct neighbor labels, bounded by
+    * its degree exactly as its neighbor array already is, so a hub is
+    * counted incrementally and never sorted — and picks the (count
+    * DESC, label ASC) winner inside the round's [[Rounds.checkpoint]]:
+    * one Spark job per round. Node ids must be integral (they double as
+    * labels); the label column is bigint after round 1. */
   def labelPropagation(edges: DataFrame, iters: Int,
-      aCol: String = "u1", bCol: String = "u2",
-      checkpointEvery: Int = 1): DataFrame = {
+      aCol: String = "u1", bCol: String = "u2"): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    // the MajorityVote udaf votes over (cnt: long, label: long) longs,
-    // so node ids must be integral (ids double as labels; the returned
-    // label column is bigint after round 1 — see scaladoc). Validate up
-    // front so a string-id graph fails with the contract spelled out
-    // instead of an encoder/cast analysis error inside round 1.
-    locally {
-      import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-      edges.select(col(aCol), col(bCol)).schema.fields.foreach { f =>
-        require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
-          s"labelPropagation node column '${f.name}' must be an integral type " +
-            s"(ids double as MajorityVote labels), got ${f.dataType.simpleString}")
+    val spark = edges.sparkSession
+    val (rows, t) = Rounds.endpoints(edges, aCol, bCol)
+    require(integral(t), s"labelPropagation node columns '$aCol', '$bCol' must be integral " +
+      s"(ids double as labels), got ${t.simpleString}")
+    val p = Rounds.partitioner(spark)
+    val nbrs = Rounds.edgeCache(undirected(rows), p)
+    // the winner among (label -> count): count DESC, label ASC
+    val vote = (m: mutable.HashMap[Long, Long]) => m.reduce { (a, b) =>
+      if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b
+    }._1
+    try {
+      var labels: RDD[(Any, Any)] =
+        nbrs.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
+      for (_ <- 1 to iters) {
+        val l = labels
+        labels = Rounds.checkpoint(
+          l.join(nbrs)
+            .flatMap { case (_, (lab, ns)) =>
+              val x = lab.asInstanceOf[Number].longValue
+              ns.iterator.map((_, x))
+            }
+            .aggregateByKey(mutable.HashMap.empty[Long, Long], p)(
+              (m, x) => { m(x) = m.getOrElse(x, 0L) + 1L; m },
+              (m, o) => { o.foreach { case (x, c) => m(x) = m.getOrElse(x, 0L) + c }; m }),
+          release = Seq(l))(x => (x._1, vote(x._2): Any)).rdd
       }
-    }
-    val e0 = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val und = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      // iterative-access exception, as in pageRank; pre-partitioned on
-      // the per-round join key (dst) so each round's und⋈labels join
-      // reads the cached layout instead of re-exchanging the edge side
-      // (kept on an r21 A/B: 25.8s vs 27.0s without, 8 graph queries,
-      // isolated min-of-5 at sf0.1)
-      .repartition(col("dst"))
-      .cache()
-    var labels = und.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    var i = 1
-    while (i <= iters) {
-      val counts = und
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      // per-node (cnt DESC, label ASC) winner via the MajorityVote
-      // hash aggregate — see the class scaladoc for why not a window
-      // (hub straggler) and not min(struct) (SortAggregate fallback)
-      val mv = udaf(new MajorityVote)
-      labels = counts
-        .groupBy(col("node"))
-        .agg(mv(col("cnt"), col("label")).as("label"))
-      if (i % checkpointEvery == 0)
-        labels = Rounds.shape(labels, col("node")).localCheckpoint(eager = true)
-      i += 1
-    }
-    labels
+      // with no round the labels are a view of the edge cache, released
+      // below: materialize them on their own
+      if (iters == 0) labels = Rounds.checkpoint(labels)(identity).rdd
+      Rounds.frame(spark, labels.map { case (v, l) => Row(v, l) },
+        ("node", t, true), ("label", if (iters == 0) t else LongType, true))
+    } finally nbrs.unpersist(blocking = false): Unit
+  }
+
+  /** Byte, short, int or long. */
+  private def integral(t: DataType): Boolean =
+    Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+
+  /** Both directions of every edge that is not a self-loop. */
+  private def undirected(rows: RDD[Row]): RDD[(Any, Any)] = rows.flatMap { r =>
+    val (a, b) = (r.get(0), r.get(1))
+    if (a == b) Iterator.empty else Iterator((a, b), (b, a))
   }
 
   /** Connected components over undirected edges — the graph module's
     * first-class face of the proven min-label/pointer-jumping loop in
     * [[Dedup.connectedComponents]] (same iteration, same O(log diameter)
-    * convergence and per-round localCheckpoint discipline; scale
-    * rationale there). Graph callers get (node, component) with
-    * component = the smallest reachable node id, without importing a
-    * dedup module for a graph primitive. Nodes with no edges don't
-    * appear (a graph is its edge set here); left-join the node universe
-    * for singleton components, exactly as [[Dedup.canonical]] does. */
+    * convergence and round discipline; scale rationale there). Graph
+    * callers get (node, component) with component = the smallest
+    * reachable node id, without importing a dedup module for a graph
+    * primitive. Nodes with no edges don't appear (a graph is its edge
+    * set here); left-join the node universe for singleton components,
+    * exactly as [[Dedup.canonical]] does. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-      aCol: String = "u1", bCol: String = "u2",
-      roundPartitions: Option[Int] = None): DataFrame =
-    Dedup.connectedComponents(
-        edges.select(col(aCol).as("d1"), col(bCol).as("d2")), maxIter,
-        roundPartitions)
+      aCol: String = "u1", bCol: String = "u2"): DataFrame =
+    Dedup.connectedComponents(edges.select(col(aCol).as("d1"), col(bCol).as("d2")), maxIter)
       .select(col("id").as("node"), col("component"))
 
   /** Modularity of a node partition (Newman & Girvan 2004 — the
@@ -473,90 +443,20 @@ object Graph {
     * counting to MIN-SUM of edge weights (bounded-round Bellman-Ford:
     * cheapest path using ≤ maxHops edges); duplicate (src, dst) edges
     * collapse to their minimum weight, deterministically. Integral
-    * weights keep the sums exact cross-engine — fractional weights
-    * inherit the usual float-sum caveat (round before comparing).
+    * weights keep the sums exact cross-engine (`dist` is bigint) — any
+    * other numeric weight sums as a double and inherits the usual
+    * float-sum caveat (round before comparing). Self-loops and edges
+    * with a null endpoint or a null weight are dropped.
     *
-    * Scale shape per hop: one edge-keyed join (current distances →
-    * neighbors) and one (node, seed) min-aggregate, map-side combined;
-    * the distance frame is bounded by nodes × |seeds| — seeds are
-    * query-sized (landmarks), never corpus-sized. Distances only ever
-    * shrink, so the fixed `maxHops` rounds are deterministic and
-    * oracle-replayable (the [[pageRank]] convention); the frame
-    * materializes every round (consumed twice: the union and the
-    * propagation join — the 2^k recompute trap). */
-  /** Shared weighted-adjacency prep for the BFS family: dedupe to min
-    * weight per (src, dst), symmetrize unless directed, CACHE (the
-    * iterative-access exception, as in pageRank — callers unpersist). */
-  private def prepAdj(edges: DataFrame, aCol: String, bCol: String,
-      directed: Boolean, weightCol: Option[String]): DataFrame = {
-    val w = weightCol.map(col).getOrElse(lit(1L))
-    val raw = edges.select(col(aCol).as("a"), col(bCol).as("b"), w.as("w"))
-      .filter(col("a") =!= col("b"))
-    val canon =
-      if (directed) raw
-      else raw.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"), col("w"))
-    val e0 = canon.groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
-    val fwd = e0.select(col("a").as("src"), col("b").as("dst"), col("w"))
-    (if (directed) fwd
-     else fwd.union(e0.select(col("b").as("src"), col("a").as("dst"), col("w"))))
-      // pre-partitioned on the per-hop join key (src): the frontier
-      // join re-reads this cache every hop, so the adjacency exchanges
-      // once here instead of once per hop (guide §2.4; kept on the same
-      // r21 A/B as labelPropagation's und cache)
-      .repartition(col("src"))
-      .cache()
-  }
-
+    * Scale shape: see [[hopRounds]]; the state is bounded by nodes ×
+    * |seeds| — seeds are query-sized (landmarks), never corpus-sized.
+    * Distances only ever shrink, so the fixed `maxHops` rounds are
+    * deterministic and oracle-replayable (the [[pageRank]] convention). */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       aCol: String = "u1", bCol: String = "u2",
       directed: Boolean = false,
-      weightCol: Option[String] = None): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val adj = prepAdj(edges, aCol, bCol, directed, weightCol)
-    // directed graphs can have sink-only nodes (never a src) — they
-    // are still seedable/reachable, so the node set is src ∪ dst
-    val nodes = adj.select(col("src").as("node"))
-      .union(adj.select(col("dst").as("node"))).distinct()
-    var dist = nodes
-      .join(broadcast(seeds.toDF("seed")), col("node") === col("seed"), "inner")
-      .select(col("node"), col("seed"), lit(0L).as("dist"))
-      .localCheckpoint(eager = true)
-    var h = 1
-    while (h <= maxHops) {
-      val prop = dist
-        .join(adj, dist("node") === adj("src"))
-        .select(col("dst").as("node"), col("seed"), (col("dist") + col("w")).as("dist"))
-      dist = Rounds.shape(dist.union(prop)
-        .groupBy(col("node"), col("seed"))
-        .agg(min(col("dist")).as("dist")), col("node"))
-        .localCheckpoint(eager = true)
-      h += 1
-    }
-    adj.unpersist()
-    dist
-  }
-
-  /** Lexicographic (dist, pred) minimum as a mergeable typed Aggregator
-    * — the hash-aggregable argmin [[shortestPathTree]]'s per-round
-    * reduction needs: `min(struct(dist, pred))` plans SortAggregate
-    * (struct buffers aren't hash-supported — the q138 LPA lesson), and
-    * two chained aggregations would double the per-hop shuffles. State
-    * is one (dist, pred) pair; ObjectHashAggregate partial+final. */
-  private class LexMin2 extends org.apache.spark.sql.expressions.Aggregator[
-      (Long, Long), (Long, Long), (Long, Long)] {
-    override def zero: (Long, Long) = (Long.MaxValue, Long.MaxValue)
-    override def reduce(b: (Long, Long), a: (Long, Long)): (Long, Long) =
-      if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b
-    override def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) =
-      reduce(a, b)
-    override def finish(b: (Long, Long)): (Long, Long) = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    override def outputEncoder: org.apache.spark.sql.Encoder[(Long, Long)] =
-      bufferEncoder
-  }
+      weightCol: Option[String] = None): DataFrame =
+    hops(edges, seeds, maxHops, aCol, bCol, directed, weightCol, withPred = false)
 
   /** [[bfsDistances]] with PATH RECONSTRUCTION: per (node, seed) the
     * shortest ≤`maxHops` distance AND the predecessor on one such
@@ -575,40 +475,97 @@ object Graph {
     * that changes no (dist, pred) pair — for hop-count weights any
     * maxHops ≥ diameter); under a deliberately truncated budget, treat
     * pred as the explanation of the hop-bounded estimate, not a
-    * certificate. Same per-hop shape as
-    * [[bfsDistances]] (edge join + per-(node, seed) reduction, frame
-    * bounded by nodes × |seeds|); the reduction is [[LexMin2]], so it
-    * stays a hash aggregate with map-side combine. Weights must be
-    * non-negative longs (hop counting when `weightCol` is None). */
+    * certificate. Same rounds as [[bfsDistances]]; node ids must be
+    * integral (pred is a bigint id). */
   def shortestPathTree(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       aCol: String = "u1", bCol: String = "u2",
       directed: Boolean = false,
-      weightCol: Option[String] = None): DataFrame = {
+      weightCol: Option[String] = None): DataFrame =
+    hops(edges, seeds, maxHops, aCol, bCol, directed, weightCol, withPred = true)
+
+  /** The hop loop of [[bfsDistances]] and [[shortestPathTree]]: dist is
+    * summed as a long over integral (or hop-count) weights, else as a
+    * double. */
+  private def hops(edges: DataFrame, seeds: DataFrame, maxHops: Int, aCol: String,
+      bCol: String, directed: Boolean, weightCol: Option[String], withPred: Boolean): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val adj = prepAdj(edges, aCol, bCol, directed, weightCol)
-    val nodes = adj.select(col("src").as("node"))
-      .union(adj.select(col("dst").as("node"))).distinct()
-    val lexmin = udaf(new LexMin2)
-    var dist = nodes
-      .join(broadcast(seeds.toDF("seed")), col("node") === col("seed"), "inner")
-      .select(col("node"), col("seed"), lit(0L).as("dist"), lit(-1L).as("pred"))
-      .localCheckpoint(eager = true)
-    var h = 1
-    while (h <= maxHops) {
-      val prop = dist
-        .join(adj, dist("node") === adj("src"))
-        .select(col("dst").as("node"), col("seed"),
-          (col("dist") + col("w")).as("dist"), col("src").as("pred"))
-      dist = Rounds.shape(dist.union(prop)
-        .groupBy(col("node"), col("seed"))
-        .agg(lexmin(col("dist"), col("pred")).as("dp"))
-        .select(col("node"), col("seed"),
-          col("dp._1").as("dist"), col("dp._2").as("pred")), col("node"))
-        .localCheckpoint(eager = true)
-      h += 1
-    }
-    adj.unpersist()
-    dist
+    val wt = weightCol.map(w => edges.select(col(w)).schema.head.dataType)
+    wt.foreach(t => require(t.isInstanceOf[NumericType], s"weightCol must be numeric, got $t"))
+    val kept = weightCol.fold(edges)(w => edges.filter(col(w).isNotNull))
+    def run[D: Numeric](w: Column, dt: DataType): DataFrame =
+      hopRounds[D](kept, seeds, maxHops, aCol, bCol, directed, w, dt, withPred)
+    // nothing is summed in 0 hops: that dist is the bigint 0 whatever the weights
+    if (maxHops == 0) run[Long](lit(1L), LongType)
+    else if (wt.forall(integral)) run[Long](weightCol.fold(lit(1L))(col(_).cast(LongType)), LongType)
+    else run[Double](col(weightCol.get).cast(DoubleType), DoubleType)
+  }
+
+  /** Scale shape: the edges are converted once into node → (neighbor,
+    * min weight) out-lists — symmetrized unless `directed`, with an
+    * empty list for a node that is only a destination — keyed by
+    * [[Rounds.partitioner]] and persisted. The state is keyed the same
+    * way and holds, per node, each reached seed's lexicographically
+    * least (dist, pred); it starts as the seeds present in the graph at
+    * (0, -1). A hop joins the state to the out-lists narrowly, offers
+    * every seed's (dist + w, node) to each neighbor, keeps the least
+    * pair per (node, seed) in ONE map-side-combined `reduceByKey`, and
+    * materializes it with one [[Rounds.checkpoint]] — one Spark job per
+    * hop. The out-lists are released in a finally and each superseded
+    * state as soon as the next one is materialized. */
+  private def hopRounds[D](edges: DataFrame, seeds: DataFrame, maxHops: Int, aCol: String,
+      bCol: String, directed: Boolean, w: Column, dt: DataType, withPred: Boolean)(
+      implicit num: Numeric[D]): DataFrame = {
+    val spark = edges.sparkSession
+    val p = Rounds.partitioner(spark)
+    val (rows, t) = Rounds.endpoints(edges, aCol, bCol, w)
+    require(!withPred || integral(t),
+      s"shortestPathTree node ids must be integral (pred is a bigint id), got ${t.simpleString}")
+    type Seen = Map[Any, (D, Long)] // seed -> least (dist, pred)
+    val least = (a: (D, Long), b: (D, Long)) =>
+      if (num.lt(b._1, a._1) || (num.equiv(a._1, b._1) && b._2 < a._2)) b else a
+    val merge = (a: Seen, b: Seen) =>
+      b.foldLeft(a) { case (m, (s, x)) => m.updated(s, m.get(s).fold(x)(least(_, x))) }
+    val pred = (v: Any) => if (withPred) v.asInstanceOf[Number].longValue else -1L
+    val out = rows.flatMap { r =>
+      val (a, b, x) = (r.get(0), r.get(1), r.getAs[D](2))
+      if (a == b) Iterator.empty
+      else Iterator((a, (b, x)), (b, if (directed) null else (a, x)))
+    }.aggregateByKey(mutable.LinkedHashMap.empty[Any, D], p)(
+      (m, e) => { if (e != null) m(e._1) = m.get(e._1).fold(e._2)(num.min(_, e._2)); m },
+      (m, o) => { o.foreach { case (d, x) => m(d) = m.get(d).fold(x)(num.min(_, x)) }; m })
+      .mapValues(_.toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // a seed names the node it equals under Spark's comparison
+      val st = seeds.toDF("seed").schema.head.dataType
+      val named = seeds.toDF("seed").select(col("seed").cast(t).as("k"), col("seed"))
+        .filter(col("k") === col("seed")).rdd.map(r => (r.get(0), r.get(1)))
+      var state: RDD[(Any, Seen)] = out.cogroup(named, p).flatMapValues { case (own, ss) =>
+        if (own.isEmpty || ss.isEmpty) None
+        else Some(ss.iterator.map(_ -> ((num.zero, -1L))).toMap: Seen)
+      }
+      for (_ <- 1 to maxHops) {
+        val s = state
+        state = Rounds.checkpoint(
+          s.join(out)
+            .flatMap { case (v, (seen, nbrs)) =>
+              Iterator((v, seen)) ++ nbrs.iterator.map { case (u, x) =>
+                (u, seen.map { case (sd, (d, _)) => sd -> ((num.plus(d, x), pred(v))) }: Seen)
+              }
+            }
+            .reduceByKey(p, merge),
+          release = Seq(s))(identity).rdd
+      }
+      // with no hop the state is a view of the out-lists, released below
+      if (maxHops == 0) state = Rounds.checkpoint(state)(identity).rdd
+      val cols = Seq(("node", t, true), ("seed", st, true), ("dist", dt, true)) ++
+        (if (withPred) Seq(("pred", LongType, true)) else Nil)
+      Rounds.frame(spark, state.flatMap { case (v, seen) =>
+        seen.iterator.map { case (sd, (d, pr)) =>
+          if (withPred) Row(v, sd, d, pr) else Row(v, sd, d)
+        }
+      }, cols: _*)
+    } finally out.unpersist(blocking = false): Unit
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over a BIPARTITE
@@ -644,7 +601,7 @@ object Graph {
       iters: Int = 2): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges.sparkSession
-    val p = Rounds.partitioner(spark, Rounds.resolve(spark))
+    val p = Rounds.partitioner(spark)
     val e = edges.select(col(uCol).as("u"), col(iCol).as("i"))
     val Array(ut, it) = e.schema.fields.map(_.dataType)
     val byU = Rounds.edgeCache(e.filter(col("u").isNotNull && col("i").isNotNull).rdd
@@ -724,14 +681,11 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
     val spark = edges.sparkSession
-    val p = Rounds.partitioner(spark, Rounds.resolve(spark))
+    val p = Rounds.partitioner(spark)
     val (rows, t) = Rounds.endpoints(edges, aCol, bCol)
     // the simple undirected graph as node -> distinct neighbors, self-loops
     // dropped; a node's degree is its neighbor count
-    val und = rows.flatMap { r =>
-      val (a, b) = (r.get(0), r.get(1))
-      if (a == b) Iterator.empty else Iterator((a, b), (b, a))
-    }
+    val und = undirected(rows)
     // the marker counts the nodes the NEXT peel would drop, so a state
     // that no round can change ends the loop without running that round
     // (peeling is monotone: a round that drops no node is an identity)

@@ -18,7 +18,7 @@ import org.apache.spark.util.AccumulatorV2
   * 1000×-pencil's knob #2 made a real lever instead of a documented
   * aspiration.
   *
-  * The iteratives exchange a node-sized state frame every round
+  * The iteratives exchange a node-sized round state every round
   * (labels, ranks, frontiers) and localCheckpoint it to keep lineage
   * flat. At test scale the default `spark.sql.shuffle.partitions`
   * is fine; in the growing-domain regime (the pencil's measured
@@ -29,29 +29,25 @@ import org.apache.spark.util.AccumulatorV2
   * across the cluster instead of funneling through a handful of
   * reducers.
   *
-  * Two ways to set it, both defaulting to current behavior:
-  *  - the session conf `spark.graft.round.partitions` — one switch
-  *    for every iterative op, no signature churn;
-  *  - an explicit `roundPartitions` argument where an op exposes one
-  *    ([[Dedup.connectedComponents]]); the argument wins over the
-  *    conf.
+  * One switch, defaulting to current behavior: the session conf
+  * `spark.graft.round.partitions`, read by every iterative op.
   *
-  * The RDD round loops (the PageRank family and [[Graph.hits]],
+  * Every round loop (the PageRank family, [[Graph.labelPropagation]],
+  * [[Graph.bfsDistances]], [[Graph.shortestPathTree]], [[Graph.hits]],
   * [[Graph.kCore]], [[Dedup.connectedComponents]] and its seeded form)
-  * key their edges and their round state by ONE `HashPartitioner`
+  * keys its edges and its round state by ONE `HashPartitioner`
   * ([[partitioner]]): the knob's width when set, else
   * `spark.sql.shuffle.partitions`. Each call converts its input frame
   * once; the loop-invariant edges are keyed, partitioned once and
   * persisted, so the state ⋈ edges join of every round is narrow. A
   * round then pays one `reduceByKey` shuffle (the CC pointer jump adds
-  * one re-key) and one job, and the result becomes a frame once. LPA,
-  * BFS and the shortest-path tree stay on DataFrames: when the knob is
-  * set, [[shape]] hash-repartitions their state frame on its key before
-  * each materialization. Exact-arithmetic rounds (component min-labels,
-  * BFS min-dists, k-core peels) are identical under any partitioning;
-  * the float-summing iteratives (PageRank, HITS) can move in the last
-  * ulp exactly as they would under any change of cluster width — the
-  * same caveat `spark.sql.shuffle.partitions` already carries.
+  * one re-key) and one job, and the result becomes a frame once.
+  * Exact-arithmetic rounds (component min-labels, LPA votes, BFS
+  * min-dists, k-core peels) are identical under any partitioning; the
+  * float-summing iteratives (PageRank, HITS, fractional BFS weights) can
+  * move in the last ulp exactly as they would under any change of
+  * cluster width — the same caveat `spark.sql.shuffle.partitions`
+  * already carries.
   *
   * [[checkpoint]] is the one materialization point of an RDD round: a
   * marker pass over the state, an eager localCheckpoint and a count —
@@ -83,35 +79,27 @@ object Rounds {
     * iterative op's partitioning to `spark.sql.shuffle.partitions`. */
   val PartitionsKey = "spark.graft.round.partitions"
 
-  /** The active round-partition count: an explicit argument wins,
-    * else the session conf, else None (current behavior). Non-positive
-    * values throw, matching the non-numeric path — silence is reserved
-    * for the UNSET case only, so a typo'd `0` can't silently disable
-    * the knob (r20 ADVICE). */
-  def resolve(spark: SparkSession,
-      explicit: Option[Int] = None): Option[Int] = {
-    val v = explicit.orElse(spark.conf.getOption(PartitionsKey).map { s =>
+  /** The active round-partition count: the session conf, else None
+    * (current behavior). Non-positive values throw, matching the
+    * non-numeric path — silence is reserved for the UNSET case only, so
+    * a typo'd `0` can't silently disable the knob (r20 ADVICE). */
+  def resolve(spark: SparkSession): Option[Int] = {
+    val v = spark.conf.getOption(PartitionsKey).map { s =>
       try s.trim.toInt
       catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"$PartitionsKey must be a positive int, got '$s'")
       }
-    })
-    v.foreach(p => require(p > 0,
-      s"$PartitionsKey / roundPartitions must be a positive int, got $p"))
+    }
+    v.foreach(p => require(p > 0, s"$PartitionsKey must be a positive int, got $p"))
     v
   }
 
-  /** Hash-repartition `df` on `key` iff the session conf sets the knob
-    * (the DataFrame loops: LPA, BFS, SPT), else pass it through. */
-  def shape(df: DataFrame, key: Column): DataFrame =
-    resolve(df.sparkSession).map(p => df.repartition(p, key)).getOrElse(df)
-
-  /** The partitioner every RDD round loop keys its edges and its round
+  /** The partitioner every round loop keys its edges and its round
     * state by: [[resolve]]'s width if set, else
     * `spark.sql.shuffle.partitions`. Two RDDs keyed by it join narrowly. */
-  def partitioner(spark: SparkSession, n: Option[Int]): HashPartitioner =
-    new HashPartitioner(n.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+  def partitioner(spark: SparkSession): HashPartitioner =
+    new HashPartitioner(resolve(spark).getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt))
 
   /** A round's materialized state plus the scalars its checkpoint job
     * read off the rows: the row count, one exact sum per `sums` function

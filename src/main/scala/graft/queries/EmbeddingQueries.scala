@@ -22,7 +22,7 @@ object EmbeddingQueries {
     * positive (cos ≥ τ) and negative (cos < τ) branches — in ONE
     * hash-aggregable pass: `max(CASE WHEN … THEN struct(cos, −nid))`
     * plans SortAggregate (struct aggregation buffers aren't
-    * hash-supported — the q138 MajorityVote / LexMin2 lesson), which at
+    * hash-supported — the KMeans.ArgMin lesson), which at
     * scale sorts the full per-bucket candidate frame; this typed
     * Aggregator keeps one (cos, nid) pair per branch and plans
     * ObjectHashAggregate with map-side partial combine. Sentinel is

@@ -1751,10 +1751,9 @@ object MLQueries {
     // the lowest predecessor id), so walking pred links recovers an
     // actual shortest path — the "how is this account connected to the
     // anchor" explanation, not just "how far". The per-round reduction
-    // is a typed lexicographic-min aggregator (hash aggregate with
-    // map-side combine — min(struct) would fall back to SortAggregate,
-    // the q138 lesson). The oracle unrolls the same three rounds with
-    // a row_number-over-(dist, pred) pick.
+    // is a lexicographic (dist, pred) minimum, map-side combined. The
+    // oracle unrolls the same three rounds with a
+    // row_number-over-(dist, pred) pick.
     GraftQuery(
       "q200_shortest_path_tree",
       (s, d) => {

@@ -129,14 +129,16 @@ class GraphSpec extends SparkSpec {
     assert(r(1L) != r(10L), r.toString)
   }
 
-  test("labelPropagation: deterministic across checkpoint cadence and 0 iters") {
+  test("labelPropagation: deterministic across runs and round widths, and 0 iters") {
     val rnd = new scala.util.Random(11)
     val e = (0 until 80).map(_ => (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
       .filter { case (a, b) => a != b }.toDF("u1", "u2")
-    val a = Graph.labelPropagation(e, iters = 4, checkpointEvery = 1)
-      .as[(Long, Long)].collect().toMap
-    val b = Graph.labelPropagation(e, iters = 4, checkpointEvery = 100)
-      .as[(Long, Long)].collect().toMap
+    def run(): Map[Long, Long] =
+      Graph.labelPropagation(e, iters = 4).as[(Long, Long)].collect().toMap
+    val a = run()
+    assert(a.size == 20 && run() == a)
+    spark.conf.set(graft.ops.Rounds.PartitionsKey, "3")
+    val b = try run() finally spark.conf.unset(graft.ops.Rounds.PartitionsKey)
     assert(a == b)
     // 0 iterations: everyone keeps their own label
     val z = Graph.labelPropagation(e, iters = 0).as[(Long, Long)].collect()

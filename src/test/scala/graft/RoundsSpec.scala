@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Graph, Rounds}
 
@@ -86,15 +86,22 @@ class RoundsSpec extends SparkSpec {
       df.select(df.columns.map(col): _*).toDF("k", "v")
         .select(col("k").cast("string"), round(col("v"), 6))
         .as[(String, Double)].collect().sorted.toSeq
-    def exact(df: DataFrame): Seq[(Long, Long)] = df.as[(Long, Long)].collect().sorted.toSeq
-    def outputs(): (Seq[Seq[(String, Double)]], Seq[Seq[(Long, Long)]]) = {
+    def exact(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val hopSeeds = Seq(100L, 0L, 203L, 999L).toDF("s")
+    val wg = g.withColumn("w", (col("u1") * 7 + col("u2")) % 5 + 1)
+    def outputs(): (Seq[Seq[(String, Double)]], Seq[Seq[String]]) = {
       val (hub, auth) = Graph.hits(ui, iters = 2)
       var state: Option[DataFrame] = None
       batches.foreach(b => state = Some(Dedup.mergeComponents(state, b).localCheckpoint(true)))
       (Seq(r6(Graph.pageRank(e, iters = 3)), r6(Graph.weightedPageRank(e, iters = 3)),
         r6(Graph.personalizedPageRank(e, iters = 3, seeds = seeds)), r6(hub), r6(auth)),
         Seq(exact(Graph.kCore(g, k = 3, maxRounds = 4)), exact(Dedup.connectedComponents(pairs)),
-          exact(state.get)))
+          exact(state.get), exact(Graph.labelPropagation(g, iters = 3)),
+          exact(Graph.bfsDistances(g, hopSeeds, maxHops = 4)),
+          exact(Graph.bfsDistances(wg, hopSeeds, maxHops = 4, directed = true,
+            weightCol = Some("w"))),
+          exact(Graph.shortestPathTree(wg, hopSeeds, maxHops = 4, directed = true,
+            weightCol = Some("w")))))
     }
     val one = under("spark.sql.shuffle.partitions" -> "1")(outputs())
     assert(one._1.forall(_.nonEmpty) && one._2.forall(_.nonEmpty))
@@ -104,37 +111,10 @@ class RoundsSpec extends SparkSpec {
     assert(under(Rounds.PartitionsKey -> "13")(outputs()) == one)
   }
 
-  /** Spark jobs submitted while `body` runs, counted after the listener
-    * bus has drained. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    Sessions.sweep(spark)
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerBusDrain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  /** jobs(n + 1 rounds) - jobs(n rounds): one round's job count; a
-    * scalar job that creeps back into the round moves it. The first call
-    * warms up (it also plans the fixture). */
-  private def jobsPerRound(n: Int)(call: Int => Unit): Int = {
-    jobsOf(call(n))
-    jobsOf(call(n + 1)) - jobsOf(call(n))
-  }
-
   test("PageRank pays a fixed number of Spark jobs per round") {
     val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("d", "e"))
       .toDF("src", "dst")
-    val perRound = jobsPerRound(2)(iters => Graph.pageRank(e, iters).collect(): Unit)
+    val perRound = RoundsSpec.jobsPerRound(spark, 2)(iters => Graph.pageRank(e, iters).collect(): Unit)
     assert(perRound == 1, s"jobs per PageRank round: $perRound")
   }
 
@@ -142,14 +122,28 @@ class RoundsSpec extends SparkSpec {
     // a 24-node path peels two nodes per round at k = 2, and its labels
     // need more than 3 rounds to converge
     val path = (0L until 23L).map(i => (i, i + 1))
-    val kc = jobsPerRound(2)(r => Graph.kCore(path.toDF("u1", "u2"), k = 2, maxRounds = r)
+    val kc = RoundsSpec.jobsPerRound(spark, 2)(r => Graph.kCore(path.toDF("u1", "u2"), k = 2, maxRounds = r)
       .collect(): Unit)
     assert(kc == 1, s"jobs per k-core round: $kc")
-    val cc = jobsPerRound(2) { m =>
+    val cc = RoundsSpec.jobsPerRound(spark, 2) { m =>
       intercept[IllegalStateException](Dedup.connectedComponents(path.toDF("d1", "d2"),
         maxIter = m)): Unit
     }
     assert(cc == 1, s"jobs per connected-components round: $cc")
+  }
+
+  test("label propagation, BFS and the shortest-path tree pay one Spark job per round") {
+    val path = (0L until 23L).map(i => (i, i + 1)).toDF("u1", "u2")
+    val w = path.withColumn("w", lit(2L))
+    val s = Seq(0L, 11L).toDF("s")
+    val lpa = RoundsSpec.jobsPerRound(spark, 2)(i => Graph.labelPropagation(path, i).collect(): Unit)
+    assert(lpa == 1, s"jobs per label-propagation round: $lpa")
+    val bfs = RoundsSpec.jobsPerRound(spark, 2)(h => Graph.bfsDistances(path, s, h).collect(): Unit)
+    assert(bfs == 1, s"jobs per BFS hop: $bfs")
+    val spt = RoundsSpec.jobsPerRound(spark, 2) { h =>
+      Graph.shortestPathTree(w, s, h, directed = true, weightCol = Some("w")).collect(): Unit
+    }
+    assert(spt == 1, s"jobs per shortest-path-tree hop: $spt")
   }
 
   test("a collected call leaves only its returned state persisted") {
@@ -180,6 +174,14 @@ class RoundsSpec extends SparkSpec {
     val prior = Dedup.connectedComponents(Seq((1L, 2L)).toDF("d1", "d2"))
       .as[(Long, Long)].collect().toSeq.toDF("id", "component")
     check("mergeComponents")(Seq(Dedup.mergeComponents(Some(prior), Seq((2L, 3L)).toDF("d1", "d2"))))
+    val s = Seq(100L, 0L).toDF("s")
+    val wg = g.withColumn("w", lit(3L))
+    check("labelPropagation")(Seq(Graph.labelPropagation(g, iters = 3)))
+    check("labelPropagation at 0 iterations")(Seq(Graph.labelPropagation(g, iters = 0)))
+    check("bfsDistances")(Seq(Graph.bfsDistances(g, s, maxHops = 3)))
+    check("bfsDistances at 0 hops")(Seq(Graph.bfsDistances(g, s, maxHops = 0)))
+    check("shortestPathTree")(Seq(Graph.shortestPathTree(wg, s, maxHops = 3, directed = true,
+      weightCol = Some("w"))))
     Sessions.sweep(spark)
   }
 
@@ -242,6 +244,55 @@ class RoundsSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
+  test("label propagation, BFS and the shortest-path tree keep their output shapes and values") {
+    // int ids, a repeated pair, self-loops (7 has no other edge) and null
+    // endpoints; int seeds, one absent (9), one null and one on the
+    // self-loop-only node
+    val ie = Seq[(Option[Int], Option[Int])]((Some(1), Some(2)), (Some(1), Some(3)),
+      (Some(2), Some(3)), (Some(3), Some(4)), (Some(4), Some(5)), (Some(5), Some(5)),
+      (Some(7), Some(7)), (Some(4), None), (None, Some(6)), (Some(2), Some(1))).toDF("u1", "u2")
+    val seeds = Seq[Option[Int]](Some(1), Some(9), None, Some(7)).toDF("s")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def pin(df: DataFrame, cols: Seq[(String, String)], want: String*): Unit = {
+      assert(shape(df) == cols)
+      assert(rows(df) == want.sorted, rows(df).mkString(" "))
+    }
+    val lpa0 = Seq("node" -> "int", "label" -> "int")
+    val lpa = Seq("node" -> "int", "label" -> "bigint")
+    pin(Graph.labelPropagation(ie, iters = 0), lpa0, "[1,1]", "[2,2]", "[3,3]", "[4,4]", "[5,5]")
+    pin(Graph.labelPropagation(ie, iters = 1), lpa, "[1,2]", "[2,1]", "[3,1]", "[4,3]", "[5,4]")
+    pin(Graph.labelPropagation(ie, iters = 2), lpa, "[1,1]", "[2,1]", "[3,1]", "[4,1]", "[5,3]")
+    val bfs = Seq("node" -> "int", "seed" -> "int", "dist" -> "bigint")
+    pin(Graph.bfsDistances(ie, seeds, maxHops = 0), bfs, "[1,1,0]")
+    for (dir <- Seq(false, true))
+      pin(Graph.bfsDistances(ie, seeds, maxHops = 2, directed = dir), bfs,
+        "[1,1,0]", "[2,1,1]", "[3,1,1]", "[4,1,2]")
+    val spt = bfs :+ ("pred" -> "bigint")
+    pin(Graph.shortestPathTree(ie, seeds, maxHops = 0), spt, "[1,1,0,-1]")
+    pin(Graph.shortestPathTree(ie, seeds, maxHops = 2), spt,
+      "[1,1,0,-1]", "[2,1,1,1]", "[3,1,1,1]", "[4,1,2,3]")
+    // fractional weights sum as doubles; a 0-hop dist stays the bigint 0
+    val fe = Seq[(Option[Int], Option[Int], Double)]((Some(1), Some(2), 0.5),
+      (Some(2), Some(3), 0.25), (Some(1), Some(3), 1.0), (Some(3), Some(3), 0.125),
+      (Some(3), Some(4), 1.5), (Some(1), Some(2), 0.75), (Some(4), None, 1.0),
+      (None, Some(1), 1.0)).toDF("u1", "u2", "w")
+    pin(Graph.bfsDistances(fe, seeds, maxHops = 0, directed = true, weightCol = Some("w")),
+      bfs, "[1,1,0]")
+    for (dir <- Seq(false, true))
+      pin(Graph.bfsDistances(fe, seeds, maxHops = 2, directed = dir, weightCol = Some("w")),
+        Seq("node" -> "int", "seed" -> "int", "dist" -> "double"),
+        "[1,1,0.0]", "[2,1,0.5]", "[3,1,0.75]", "[4,1,2.5]")
+    // integral weights keep a bigint dist
+    val le = Seq((1, 2, 2L), (2, 3, 1L), (1, 3, 3L), (3, 4, 1L), (3, 3, 1L)).toDF("u1", "u2", "w")
+    pin(Graph.shortestPathTree(le, seeds, maxHops = 2, directed = true, weightCol = Some("w")),
+      spt, "[1,1,0,-1]", "[2,1,2,1]", "[3,1,3,1]", "[4,1,4,3]")
+    // long ids with int seeds: the seed column keeps the seeds' type
+    val mixed = Graph.bfsDistances(Seq((1L, 2L), (2L, 3L)).toDF("u1", "u2"),
+      Seq(1, 3).toDF("s"), maxHops = 1)
+    pin(mixed, Seq("node" -> "bigint", "seed" -> "int", "dist" -> "bigint"),
+      "[1,1,0]", "[2,1,1]", "[2,3,1]", "[3,3,0]")
+  }
+
   test("hits keeps its output and Spark round's HALF_UP 6 dp between half-steps") {
     val ui = Seq[(java.lang.Long, java.lang.Integer)]((1L, 1), (1L, 2), (2L, 1), (4L, 3),
       (3L, null), (null, 2)).toDF("u", "i")
@@ -263,5 +314,34 @@ class RoundsSpec extends SparkSpec {
       Seq.fill(200)(rnd.nextDouble() * math.pow(10, -rnd.nextInt(8)))
     val spark6 = xs.toDF("x").select(round(col("x"), 6)).as[Double].collect().toSeq
     assert(xs.map(Graph.round6) == spark6)
+  }
+}
+
+object RoundsSpec {
+  /** Spark jobs submitted while `body` runs, counted after the listener
+    * bus has drained. */
+  def jobsOf(spark: SparkSession)(body: => Unit): Int = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+    }
+    Sessions.sweep(spark)
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** jobs(n + 1 rounds) - jobs(n rounds): one round's job count; a
+    * scalar job that creeps back into the round moves it. The first call
+    * warms up (it also plans the fixture). */
+  def jobsPerRound(spark: SparkSession, n: Int)(call: Int => Unit): Int = {
+    jobsOf(spark)(call(n))
+    jobsOf(spark)(call(n + 1)) - jobsOf(spark)(call(n))
   }
 }

@@ -243,35 +243,24 @@ class ScaleSpec extends SparkSpec {
     assert(objAgg.size >= 2, s"expected partial+final ObjectHashAggregate, got ${objAgg.size}")
   }
 
-  test("label-propagation argmax is a hash aggregate, no Window (q138 path)") {
-    // the per-round winner selection must be the MajorityVote udaf —
-    // an ObjectHashAggregate with map-side combine — not a row_number
-    // window whose per-node partition a celebrity hub's degree would
-    // bound, and not min(struct(...)), which falls back to
-    // SortAggregate (struct buffers aren't hash-supported).
-    // checkpointEvery > iters keeps the full iteration lineage in ONE
-    // inspectable plan (q138's default eagerly materializes per round,
-    // which would hide the iteration subplans from this assert)
-    val edges = Tables(spark, sf, "events")
-      .filter($"user_id".isNotNull)
-      .select($"user_id".as("u1"), ($"user_id" % 7).as("u2"))
-    val plan = graft.ops.Graph.labelPropagation(edges, iters = 2, checkpointEvery = 3)
-      .queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
-    val windows = plan.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
-    assert(windows.isEmpty, "LPA must not plan a Window — argmax must be a hash aggregate")
-    // the MajorityVote argmax itself must be the hash-based object
-    // aggregate (partial + final per round), not a SortAggregate
-    val objAgg = plan.collect {
-      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
-    }
-    assert(objAgg.size >= 4, s"expected partial+final ObjectHashAggregate per round, got ${objAgg.size}")
-    val sortAgg = plan.collect {
-      case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
-    }
-    assert(sortAgg.isEmpty, s"LPA argmax fell back to SortAggregate:\n${sortAgg.headOption}")
+  test("label propagation votes a 2,000-label hub in one job per round, ties to the smallest label (q138 path)") {
+    // the per-round vote is one map-side-combined count per node, picked
+    // inside the round's checkpoint job: a celebrity hub whose 2,000
+    // neighbors each offer a distinct label is counted incrementally (no
+    // window, no sort), and the 2,000-way tie goes to the smallest label
+    val leaves = new scala.util.Random(17).shuffle((5000L until 7000L).toVector)
+    val star = leaves.map(l => (1L, l)).toDF("u1", "u2")
+    def lpa(iters: Int): Map[Long, Long] =
+      graft.ops.Graph.labelPropagation(star, iters).as[(Long, Long)].collect().toMap
+    val one = lpa(1)
+    assert(one.size == 2001 && one(1L) == 5000L, s"hub label ${one.get(1L)}")
+    assert(leaves.forall(one(_) == 1L))
+    // round 2: all 2,000 leaves offer the hub's own id
+    val two = lpa(2)
+    assert(two(1L) == 1L && leaves.forall(two(_) == 5000L))
+    val perRound = RoundsSpec.jobsPerRound(spark, 1)(i =>
+      graft.ops.Graph.labelPropagation(star, i).collect(): Unit)
+    assert(perRound == 1, s"jobs per label-propagation round: $perRound")
   }
 
   test("salted join is row-identical to the direct join, shuffles on (key, salt)") {
@@ -656,8 +645,9 @@ class ScaleSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
       (21L, 22L), (22L, 23L), (5L, 3L)).toDF("d1", "d2")
     val default = ops.Dedup.connectedComponents(pairs)
-    val shaped = ops.Dedup.connectedComponents(pairs,
-      roundPartitions = Some(7))
+    spark.conf.set(ops.Rounds.PartitionsKey, "7")
+    val shaped = try ops.Dedup.connectedComponents(pairs)
+      finally spark.conf.unset(ops.Rounds.PartitionsKey)
     // (a) the returned state is the last checkpointed round frame
     assert(shaped.rdd.getNumPartitions == 7,
       s"expected 7 round partitions, got ${shaped.rdd.getNumPartitions}")
@@ -665,7 +655,7 @@ class ScaleSpec extends SparkSpec {
     // (b) identical labels
     val d = default.as[(Long, Long)].collect().toSet
     assert(shaped.as[(Long, Long)].collect().toSet == d)
-    // (d) conf form reaches ops with no explicit argument
+    // (d) the conf is read per call, by every op
     spark.conf.set(ops.Rounds.PartitionsKey, "5")
     try {
       val viaConf = ops.Dedup.connectedComponents(pairs)
@@ -682,14 +672,12 @@ class ScaleSpec extends SparkSpec {
   test("round-partitions knob: non-positive values throw, unset is silent (r20 ADVICE)") {
     import spark.implicits._
     val pairs = Seq((1L, 2L)).toDF("d1", "d2")
-    // explicit non-positive argument
-    intercept[IllegalArgumentException] {
-      ops.Dedup.connectedComponents(pairs, roundPartitions = Some(0))
-    }
-    // conf-set zero / negative: same error class as the non-numeric path
+    // conf-set zero / negative: same error class as the non-numeric
+    // path, from the resolver and from an op that reads it
     spark.conf.set(ops.Rounds.PartitionsKey, "0")
-    try intercept[IllegalArgumentException] {
-      ops.Rounds.resolve(spark)
+    try {
+      intercept[IllegalArgumentException](ops.Rounds.resolve(spark))
+      intercept[IllegalArgumentException](ops.Dedup.connectedComponents(pairs))
     } finally spark.conf.unset(ops.Rounds.PartitionsKey)
     spark.conf.set(ops.Rounds.PartitionsKey, "-3")
     try intercept[IllegalArgumentException] {
