@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.functions._
 import graft.ops.Skew
 import graft.queries.Tables
@@ -241,6 +242,47 @@ class ScaleSpec extends SparkSpec {
       case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
     }
     assert(objAgg.size >= 2, s"expected partial+final ObjectHashAggregate, got ${objAgg.size}")
+  }
+
+  test("label-propagation argmax is a hash aggregate, no Window (q138 path)") {
+    // the per-round winner selection must be a map-side-combined
+    // aggregateByKey into per-node label counts, not a sorted or grouped
+    // shuffle whose per-node partition a celebrity hub's degree would
+    // bound. Every shuffle LPA runs (the adjacency build and one vote per
+    // round) is seen through the stages it submits
+    val edges = Tables(spark, sf, "events")
+      .filter($"user_id".isNotNull)
+      .select($"user_id".as("u1"), ($"user_id" % 7).as("u2"))
+    val shuffles = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        s.stageInfo.rddInfos.filter(_.name == "ShuffledRDD").foreach { r =>
+          shuffles.put(r.id, r.scope.map(_.name).getOrElse("")): Unit
+        }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val result = try {
+      val r = graft.ops.Graph.labelPropagation(edges, iters = 2)
+      ListenerBusDrain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val scopes = shuffles.asScala.values.toSeq
+    assert(scopes.count(_ == "aggregateByKey") >= 3,
+      s"expected the adjacency build and one vote per round as aggregateByKey, got $scopes")
+    assert(scopes.forall(_ == "aggregateByKey"), s"LPA shuffled other than by aggregateByKey: $scopes")
+    val plan = result.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val windows = plan.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    assert(windows.isEmpty, "LPA must not plan a Window — argmax must be a hash aggregate")
+    val sortAgg = plan.collect {
+      case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+    }
+    assert(sortAgg.isEmpty, s"LPA argmax fell back to SortAggregate:\n${sortAgg.headOption}")
   }
 
   test("label propagation votes a 2,000-label hub in one job per round, ties to the smallest label (q138 path)") {
