@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions._
+import graft.functions.GraftFunctions
 import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin, RewriteCosineTopK}
 
 /** Cluster-deploy registration point:
@@ -24,26 +24,13 @@ import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin, RewriteCosineTo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def fn(name: String, builder: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", name),
-      builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
     ext.injectOptimizerRule(_ => RewriteCosineTopK)
-    ext.injectFunction(fn("array_dot", es => ArrayDot(es(0), es(1))))
-    ext.injectFunction(fn("p60", es => Portable60(es.head)))
-    ext.injectFunction(fn("p60_rolling8_min", es => RollingMin60(es.head)))
-    ext.injectFunction(fn("simhash32", es => SimHash32(es.head)))
-    ext.injectFunction(fn("simhash64", es => SimHash64(es.head)))
-    ext.injectFunction(fn("word_shingles", es => WordShingles(es(0),
-      es(1).eval().asInstanceOf[Int])))
-    ext.injectFunction(fn("zorder2", es => ZOrder2(es(0), es(1),
-      es(2).eval().asInstanceOf[Int])))
-    ext.injectFunction(fn("sign_lsh", es => SignLsh(es(0),
-      es(1).eval().asInstanceOf[Int], es(2).eval().asInstanceOf[Int],
-      if (es.length > 3) es(3).eval().asInstanceOf[Int] else 0)))
+    GraftFunctions.all.foreach { case (name, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), builder))
+    }
   }
 }

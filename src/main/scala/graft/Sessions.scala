@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session hygiene for long-lived sessions running graft operators.
+/** Session construction ([[local]]) and hygiene ([[sweep]]) for
+  * sessions running graft operators.
   *
   * Several builders `cache()` intermediates that their RETURNED (lazy)
   * frame still references (`UserSimilarity.featurize`'s tokenized
@@ -32,5 +33,21 @@ object Sessions {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = false))
+  }
+
+  /** The local session every main and the test suites run on: `cores`
+    * threads, `spark.sql.shuffle.partitions` = `cores` (so every round
+    * loop's [[graft.ops.Rounds.partitioner]] is as wide as the cores),
+    * AQE on, session time zone UTC, no UI, log level WARN. */
+  def local(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

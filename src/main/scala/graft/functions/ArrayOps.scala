@@ -126,8 +126,8 @@ case class SignLsh(child: Expression, planes: Int, dim: Int, offset: Int = 0)
 object GraftFunctions {
   // one registration per session: every op entry point calls register()
   // defensively (specs hand ops raw toDF frames), so gate the actual
-  // registry writes behind a session-keyed set instead of re-writing five
-  // temp functions per op invocation. WEAK keys: a strong set would pin
+  // registry writes behind a session-keyed set instead of re-writing every
+  // temp function per op invocation. WEAK keys: a strong set would pin
   // every session ever registered (sessionState and all) for the JVM
   // lifetime — a leak in long-lived multi-session processes and suites.
   private val registered =
@@ -135,33 +135,27 @@ object GraftFunctions {
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
+  /** graft's SQL functions: (name, builder) pairs, the one list that
+    * [[register]] and [[graft.GraftExtensions]] both install. */
+  val all: Seq[(String, Seq[Expression] => Expression)] = {
+    def int(e: Expression): Int = e.eval().asInstanceOf[Int]
+    Seq(
+      "array_dot" -> (es => ArrayDot(es(0), es(1))),
+      "p60" -> (es => Portable60(es.head)),
+      "p60_rolling8_min" -> (es => RollingMin60(es.head)),
+      "simhash32" -> (es => SimHash32(es.head)),
+      "simhash64" -> (es => SimHash64(es.head)),
+      "word_shingles" -> (es => WordShingles(es(0), int(es(1)))),
+      "winnow60" -> (es => Winnow60(es(0), int(es(1)), int(es(2)))),
+      "zorder2" -> (es => ZOrder2(es(0), es(1), int(es(2)))),
+      "sign_lsh" -> (es => SignLsh(es(0), int(es(1)), int(es(2)),
+        if (es.length > 3) int(es(3)) else 0)))
+  }
+
   /** Idempotently register graft's SQL functions on a session, so query
     * builders can use them via expr("array_dot(a, b)") / expr("p60(s)"). */
-  def register(spark: SparkSession): Unit = if (registered.add(spark)) {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot", exprs => ArrayDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "p60", exprs => Portable60(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "p60_rolling8_min", exprs => RollingMin60(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow60", exprs => Winnow60(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder2", exprs => ZOrder2(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_lsh", exprs => SignLsh(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int],
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Int] else 0),
-      "scala_udf")
+  def register(spark: SparkSession): Unit = if (registered.add(spark)) all.foreach {
+    case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
   }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -303,12 +303,7 @@ object Dedup {
     * jump), one `reduceByKey` of the offered labels, and ONE
     * [[Rounds.checkpoint]] job, whose marker counts the labels that
     * shrank. The start (own ids, or the seed) rides round 1's job.
-    *
-    * The [[Rounds.PartitionsKey]] session conf sizes the edge cache,
-    * the per-round shuffles and the checkpointed state — the 1000×
-    * lever: ~128 MB per partition of round state. Unset =
-    * `spark.sql.shuffle.partitions`. Labels are exact — the result is
-    * identical under any partitioning.
+    * Labels are exact — the result is identical under any partitioning.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
     connectedComponentsFrom(pairs, None, maxIter)
@@ -502,6 +497,4 @@ object Dedup {
         .as("c"))
       .select(col("doc_id"), col("c.fp").as("fp"), col("c.n_tok").as("n_tok"))
   }
-
-  private[graft] def spark(df: DataFrame): SparkSession = df.sparkSession
 }

@@ -13,35 +13,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.AccumulatorV2
 
-/** Round-state partition sizing for the iterative operators
-  * ([[Dedup.connectedComponents]], the [[Graph]] family) — the
-  * 1000×-pencil's knob #2 made a real lever instead of a documented
-  * aspiration.
-  *
-  * The iteratives exchange a node-sized round state every round
-  * (labels, ranks, frontiers) and localCheckpoint it to keep lineage
-  * flat. At test scale the default `spark.sql.shuffle.partitions`
-  * is fine; in the growing-domain regime (the pencil's measured
-  * 0.2–1.6 GB/round at 1000×) the round exchanges and the
-  * checkpointed blocks should be sized to ~128 MB per partition —
-  * `partitions ≈ round-state bytes / 128 MB` — so no single task
-  * carries an outsized block and the per-round shuffle fans out
-  * across the cluster instead of funneling through a handful of
-  * reducers.
-  *
-  * One switch, defaulting to current behavior: the session conf
-  * `spark.graft.round.partitions`, read by every iterative op.
+/** The one round path of the iterative operators
+  * ([[Dedup.connectedComponents]], the [[Graph]] family).
   *
   * Every round loop (the PageRank family, [[Graph.labelPropagation]],
   * [[Graph.bfsDistances]], [[Graph.shortestPathTree]], [[Graph.hits]],
   * [[Graph.kCore]], [[Dedup.connectedComponents]] and its seeded form)
   * keys its edges and its round state by ONE `HashPartitioner`
-  * ([[partitioner]]): the knob's width when set, else
-  * `spark.sql.shuffle.partitions`. Each call converts its input frame
-  * once; the loop-invariant edges are keyed, partitioned once and
-  * persisted, so the state ⋈ edges join of every round is narrow. A
-  * round then pays one `reduceByKey` shuffle (the CC pointer jump adds
-  * one re-key) and one job, and the result becomes a frame once.
+  * ([[partitioner]]) over `spark.sql.shuffle.partitions`. Each call
+  * converts its input frame once; the loop-invariant edges are keyed,
+  * partitioned once and persisted, so the state ⋈ edges join of every
+  * round is narrow. A round then pays one `reduceByKey` shuffle (the CC
+  * pointer jump adds one re-key) and one job, and the result becomes a
+  * frame once.
   * Exact-arithmetic rounds (component min-labels, LPA votes, BFS
   * min-dists, k-core peels) are identical under any partitioning; the
   * float-summing iteratives (PageRank, HITS, fractional BFS weights) can
@@ -75,31 +59,11 @@ import org.apache.spark.util.AccumulatorV2
   */
 object Rounds {
 
-  /** Session conf key: positive int; unset (default) = leave every
-    * iterative op's partitioning to `spark.sql.shuffle.partitions`. */
-  val PartitionsKey = "spark.graft.round.partitions"
-
-  /** The active round-partition count: the session conf, else None
-    * (current behavior). Non-positive values throw, matching the
-    * non-numeric path — silence is reserved for the UNSET case only, so
-    * a typo'd `0` can't silently disable the knob (r20 ADVICE). */
-  def resolve(spark: SparkSession): Option[Int] = {
-    val v = spark.conf.getOption(PartitionsKey).map { s =>
-      try s.trim.toInt
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$PartitionsKey must be a positive int, got '$s'")
-      }
-    }
-    v.foreach(p => require(p > 0, s"$PartitionsKey must be a positive int, got $p"))
-    v
-  }
-
   /** The partitioner every round loop keys its edges and its round
-    * state by: [[resolve]]'s width if set, else
-    * `spark.sql.shuffle.partitions`. Two RDDs keyed by it join narrowly. */
+    * state by: `spark.sql.shuffle.partitions` wide. Two RDDs keyed by it
+    * join narrowly. */
   def partitioner(spark: SparkSession): HashPartitioner =
-    new HashPartitioner(resolve(spark).getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** A round's materialized state plus the scalars its checkpoint job
     * read off the rows: the row count, one exact sum per `sums` function

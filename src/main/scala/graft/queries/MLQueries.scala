@@ -1466,9 +1466,8 @@ object MLQueries {
       "q158_bfs_distances",
       (s, d) => {
         val edges = coEdges(s, d)
-        val seeds = edges.select(col("u1").as("node"))
-          .union(edges.select(col("u2").as("node")))
-          .distinct().filter(col("node").isin(0, 1, 2))
+        // anchors absent from the graph are ignored by the hop loop
+        val seeds = s.range(3).toDF("node")
         graft.ops.Graph.bfsDistances(edges, seeds, maxHops = 3)
           .orderBy(col("node"), col("seed"))
       },
@@ -1506,9 +1505,8 @@ object MLQueries {
       "q187_bfs_weighted_directed",
       (s, d) => {
         val wedges = coEdgesWeighted(s, d)
-        val seeds = wedges.select(col("u1").as("node"))
-          .union(wedges.select(col("u2").as("node")))
-          .distinct().filter(col("node").isin(0, 1, 2))
+        // anchors absent from the graph are ignored by the hop loop
+        val seeds = s.range(3).toDF("node")
         graft.ops.Graph.bfsDistances(wedges, seeds, maxHops = 3,
             directed = true, weightCol = Some("w"))
           .orderBy(col("node"), col("seed"))
@@ -1758,9 +1756,8 @@ object MLQueries {
       "q200_shortest_path_tree",
       (s, d) => {
         val wedges = coEdgesWeighted(s, d)
-        val seeds = wedges.select(col("u1").as("node"))
-          .union(wedges.select(col("u2").as("node")))
-          .distinct().filter(col("node").isin(0, 1, 2))
+        // anchors absent from the graph are ignored by the hop loop
+        val seeds = s.range(3).toDF("node")
         graft.ops.Graph.shortestPathTree(wedges, seeds, maxHops = 3,
             directed = true, weightCol = Some("w"))
           .orderBy(col("node"), col("seed"))

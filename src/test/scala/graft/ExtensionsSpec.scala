@@ -34,6 +34,14 @@ class ExtensionsSpec extends SparkSpec {
       assert(s2.sql("SELECT p60('abc') AS h").head().getLong(0) == 648541476951500027L)
       assert(s2.sql("SELECT zorder2(3L, 5L, 8) AS z").head().getLong(0) ==
         graft.functions.ZOrder2.interleave(3L, 5L, 8))
+      val text = "the quick brown fox jumps over the lazy dog"
+      val fps = s2.sql(s"SELECT winnow60('$text', 5, 4) AS f").head().getSeq[Long](0)
+      assert(fps.nonEmpty && fps == graft.functions.TextHashOps.winnow60(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text), 5, 4).toLongArray().toSeq)
+      // every function the runtime register() installs is injected too
+      graft.functions.GraftFunctions.all.foreach { case (name, _) =>
+        assert(s2.catalog.functionExists(name), name)
+      }
       // the as-of plan goes through the INJECTED strategy: build the
       // logical node directly (AsOfJoin.asOf would self-register via
       // spark.experimental — exactly the path this config replaces) and

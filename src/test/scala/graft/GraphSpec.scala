@@ -137,9 +137,7 @@ class GraphSpec extends SparkSpec {
       Graph.labelPropagation(e, iters = 4).as[(Long, Long)].collect().toMap
     val a = run()
     assert(a.size == 20 && run() == a)
-    spark.conf.set(graft.ops.Rounds.PartitionsKey, "3")
-    val b = try run() finally spark.conf.unset(graft.ops.Rounds.PartitionsKey)
-    assert(a == b)
+    assert(under("spark.sql.shuffle.partitions" -> "3")(run()) == a)
     // 0 iterations: everyone keeps their own label
     val z = Graph.labelPropagation(e, iters = 0).as[(Long, Long)].collect()
     assert(z.forall { case (n, l) => n == l })

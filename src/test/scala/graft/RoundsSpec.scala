@@ -49,17 +49,6 @@ class RoundsSpec extends SparkSpec {
     assert(comps.length == 64 && comps.forall(_._2 == 0L), comps.toSeq.toString)
   }
 
-  /** Run `body` with `confs` set on the session, restoring them after. */
-  private def under[A](confs: (String, String)*)(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** A seeded random long-keyed graph: a 40-node path (so the loops run
     * several rounds), a few dense clusters and random sparse edges. */
   private lazy val longGraph: Seq[(Long, Long)] = {
@@ -108,7 +97,7 @@ class RoundsSpec extends SparkSpec {
     // the folded components are the one-shot components
     assert(one._2(2) == one._2(1))
     assert(under("spark.sql.shuffle.partitions" -> "7")(outputs()) == one)
-    assert(under(Rounds.PartitionsKey -> "13")(outputs()) == one)
+    assert(under("spark.sql.shuffle.partitions" -> "13")(outputs()) == one)
   }
 
   test("PageRank pays a fixed number of Spark jobs per round") {

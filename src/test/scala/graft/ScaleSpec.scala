@@ -677,56 +677,30 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("round-partitions knob: component rounds honor it, results identical") {
-    // the 1000x-pencil's knob #2 surfaced: sizing the per-round label
-    // exchange (~128 MB/partition of round state at scale). The knob
-    // must (a) actually shape the materialized round state, (b) leave
-    // the exact-long component labels bit-identical, (c) default to
-    // current behavior, (d) be settable session-wide via conf.
+  test("round width: component and BFS rounds follow spark.sql.shuffle.partitions, results identical") {
+    // the round loops key their state by spark.sql.shuffle.partitions:
+    // the returned state (the last checkpointed round) carries that many
+    // partitions, and the exact-long component labels do not move
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
       (21L, 22L), (22L, 23L), (5L, 3L)).toDF("d1", "d2")
+    def bfs() = ops.Graph.bfsDistances(
+      Seq((1L, 2L), (2L, 3L)).toDF("u1", "u2"), Seq(1L).toDF("seed"), maxHops = 2)
     val default = ops.Dedup.connectedComponents(pairs)
-    spark.conf.set(ops.Rounds.PartitionsKey, "7")
-    val shaped = try ops.Dedup.connectedComponents(pairs)
-      finally spark.conf.unset(ops.Rounds.PartitionsKey)
-    // (a) the returned state is the last checkpointed round frame
-    assert(shaped.rdd.getNumPartitions == 7,
-      s"expected 7 round partitions, got ${shaped.rdd.getNumPartitions}")
-    assert(default.rdd.getNumPartitions != 7)
-    // (b) identical labels
     val d = default.as[(Long, Long)].collect().toSet
-    assert(shaped.as[(Long, Long)].collect().toSet == d)
-    // (d) the conf is read per call, by every op
-    spark.conf.set(ops.Rounds.PartitionsKey, "5")
-    try {
-      val viaConf = ops.Dedup.connectedComponents(pairs)
-      assert(viaConf.rdd.getNumPartitions == 5)
-      assert(viaConf.as[(Long, Long)].collect().toSet == d)
-      // and the Graph iteratives' round state inherits it too
-      val bfs = ops.Graph.bfsDistances(
-        Seq((1L, 2L), (2L, 3L)).toDF("u1", "u2"), Seq(1L).toDF("seed"),
-        maxHops = 2)
-      assert(bfs.rdd.getNumPartitions == 5)
-    } finally spark.conf.unset(ops.Rounds.PartitionsKey)
-  }
-
-  test("round-partitions knob: non-positive values throw, unset is silent (r20 ADVICE)") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L)).toDF("d1", "d2")
-    // conf-set zero / negative: same error class as the non-numeric
-    // path, from the resolver and from an op that reads it
-    spark.conf.set(ops.Rounds.PartitionsKey, "0")
-    try {
-      intercept[IllegalArgumentException](ops.Rounds.resolve(spark))
-      intercept[IllegalArgumentException](ops.Dedup.connectedComponents(pairs))
-    } finally spark.conf.unset(ops.Rounds.PartitionsKey)
-    spark.conf.set(ops.Rounds.PartitionsKey, "-3")
-    try intercept[IllegalArgumentException] {
-      ops.Rounds.resolve(spark)
-    } finally spark.conf.unset(ops.Rounds.PartitionsKey)
-    // unset stays silent (None = session default behavior)
-    assert(ops.Rounds.resolve(spark).isEmpty)
+    val b = bfs().collect().toSet
+    Seq(7, 5).foreach { n =>
+      assert(default.rdd.getNumPartitions != n)
+      under("spark.sql.shuffle.partitions" -> n.toString) {
+        val cc = ops.Dedup.connectedComponents(pairs)
+        assert(cc.rdd.getNumPartitions == n,
+          s"expected $n partitions of round state, got ${cc.rdd.getNumPartitions}")
+        assert(cc.as[(Long, Long)].collect().toSet == d)
+        val hops = bfs()
+        assert(hops.rdd.getNumPartitions == n)
+        assert(hops.collect().toSet == b)
+      }
+    }
   }
 
   test("lshCandidates bandK must be whole bands (r20 ADVICE: partial trailing band)") {

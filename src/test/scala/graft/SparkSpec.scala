@@ -7,12 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned shuffle partitions for deterministic float reductions,
   * SURVEY §5.3). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with `confs` set on the session, restoring them after. */
+  def under[A](confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
