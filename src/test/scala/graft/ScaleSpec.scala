@@ -677,7 +677,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("round width: component and BFS rounds follow spark.sql.shuffle.partitions, results identical") {
+  test("round width: CC and BFS rounds follow spark.sql.shuffle.partitions, same results") {
     // the round loops key their state by spark.sql.shuffle.partitions:
     // the returned state (the last checkpointed round) carries that many
     // partitions, and the exact-long component labels do not move
