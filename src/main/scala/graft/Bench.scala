@@ -35,17 +35,11 @@ object Bench {
     // watch log). Hashing the name spreads each family uniformly across
     // the run so no single GC/JIT pressure window eats one family's
     // readings. Stable across rounds (pure function of the name — new
-    // queries insert without reshuffling neighbors' relative order);
-    // SPARK_GRAFT_BENCH_ORDER=name restores alphabetical for diffing
-    // against old artifacts.
-    val ordered =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("name"))
-        SparkEntry.queries.toSeq.sortBy(_._1)
-      else
-        SparkEntry.queries.toSeq.sortBy { case (name, _) =>
-          (scala.util.hashing.MurmurHash3.stringHash(name), name)
-        }
-    val selected = ordered
+    // queries insert without reshuffling neighbors' relative order).
+    val selected = SparkEntry.queries.toSeq
+      .sortBy { case (name, _) =>
+        (scala.util.hashing.MurmurHash3.stringHash(name), name)
+      }
       .filter { case (name, _) => args.isEmpty || args.exists(name.contains) }
     // Full-suite JIT/codegen warmup at the smallest SF: every selected
     // query runs once on a tiny fixture before anything is timed. The
@@ -97,7 +91,7 @@ object Bench {
         // late-suite inflation (queries sorting after q46 spiked 5-12x
         // in some rounds and not others).
         Sessions.sweep(spark)
-        // GC between queries, ADAPTIVE by default since r18: the
+        // GC between queries, ADAPTIVE since r18: the
         // unpersist above only DROPS references — reclamation waits for
         // whenever the JVM collects, so query N+1 can pay query N's
         // garbage as a mid-run pause (the r17 official run's scattered
@@ -107,20 +101,14 @@ object Bench {
         // r18 on the full 277-query suite, always-GC cost 385.8s vs
         // 284.8s without (median +0.34s/query — the r13 ~0.1s estimate
         // doesn't hold at today's heap) while preventing only ~6s of
-        // spikes in a clean environment. So the default collects ONLY
+        // spikes in a clean environment. So it collects ONLY
         // under heap pressure (used > 50% of -Xmx after the cache
         // sweep): in a clean run the guard almost never fires and the
         // suite reads like GC-off; in a garbage-accumulating run it
         // fires exactly where the debt would otherwise surface as a
         // mid-query pause attributed to an innocent plan.
-        // SPARK_GRAFT_BENCH_GC=1 forces every repeat (the old opt-in),
-        // =0 disables entirely.
-        val gcMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "")
-        if (gcMode == "1") System.gc()
-        else if (gcMode != "0") {
-          val rt = Runtime.getRuntime
-          if (rt.totalMemory() - rt.freeMemory() > rt.maxMemory() / 2) System.gc()
-        }
+        val rt = Runtime.getRuntime
+        if (rt.totalMemory() - rt.freeMemory() > rt.maxMemory() / 2) System.gc()
         ((System.nanoTime() - t0) / 1e9, err)
       }
       val runs = scala.collection.mutable.ArrayBuffer.empty[(Double, Option[String])]

@@ -65,9 +65,9 @@ object IvfState {
   }
 
   /** The assign-only path: one closure-scan pass of the new batch
-    * against the loaded centroids ([[KMeans.assignScan]] — same argmin
-    * as the join face, no N×k intermediates) — (id, cluster, d), no
-    * re-fit. */
+    * against the loaded centroids ([[KMeans.assignScan]] — the argmin
+    * [[KMeans.lloyd]] fits with, no N×k intermediates) — (id, cluster,
+    * d), no re-fit. */
   def assignOnly(newBatch: DataFrame, idCol: String, vecCol: String,
       state: Loaded): DataFrame =
     KMeans.assignScan(newBatch, idCol, vecCol, state.cents)

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Lloyd's k-means over an embedding column, hand-rolled on DataFrame
@@ -11,23 +10,23 @@ import org.apache.spark.sql.functions._
   * cross-engine).
   *
   * Scale shape: centroids are driver-side state (k×d doubles — the same
-  * sketch-sized state MLlib's KMeans keeps between iterations), inlined
-  * into the assignment expression as literals. ASSIGNMENT is therefore
-  * shuffle-free — one scan computes the argmin over k inlined centroid
-  * vectors per row, no N×k crossJoin, no exchange. The only shuffle per
-  * iteration is the centroid UPDATE: a (cluster, dim) grouped mean —
-  * k·d groups with map-side partial aggregation, so the exchange
-  * carries O(partitions · k · d) rows regardless of N. Per iteration at
-  * 100 TB: one full scan + one tiny agg; the k×d collect is
+  * sketch-sized state MLlib's KMeans keeps between iterations), shipped
+  * once per task in the assignment closure as primitive arrays.
+  * ASSIGNMENT is therefore shuffle-free — one scan computes the argmin
+  * over the k centroids per row, no N×k crossJoin, no exchange. The only
+  * shuffle per iteration is the centroid UPDATE: a (cluster, dim)
+  * grouped mean — k·d groups with map-side partial aggregation, so the
+  * exchange carries O(partitions · k · d) rows regardless of N. Per
+  * iteration at 100 TB: one full scan + one tiny agg; the k×d collect is
   * sketch-sized, never O(N).
   *
   * Determinism (cross-engine, the q129/q146 bounds convention):
   *  - float inputs are cast to double before any arithmetic;
   *  - the argmin orders by round(L2 distance, 6dp) with ties broken by
-  *    the LOWEST centroid index (struct ordering on (dist, idx)), so an
-  *    engine-side 1-ulp summation difference can't flip an assignment
-  *    unless two rounded distances collide exactly — in which case both
-  *    engines agree on the tie-break;
+  *    the LOWEST centroid index, so an engine-side 1-ulp summation
+  *    difference can't flip an assignment unless two rounded distances
+  *    collide exactly — in which case both engines agree on the
+  *    tie-break;
   *  - updated centroid means are rounded to 6dp each round, re-pinning
   *    both engines to identical centroids before the next assignment;
   *  - seeding is the k lowest-id vectors (no RNG);
@@ -37,42 +36,13 @@ object KMeans {
 
   /** Run `iters` Lloyd iterations; returns the final assignment frame
     * (`id`, `cluster`) plus the final centroids (for callers that score
-    * against them). */
+    * against them). Every iteration and the final pass assign through
+    * [[assignScan]]'s kernel, so k can scale with the corpus
+    * ([[scaledK]], SemDeDup's prescription) — centroids are closure
+    * DATA, not expression literals, so there is no codegen or plan-size
+    * ceiling on k, and no N×k intermediate rows. [[oracleCtes]] /
+    * [[oracleCtesScaledK]] describe the same chain in SQL. */
   def lloyd(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): (DataFrame, Seq[Seq[Double]]) = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    val v = normalize(emb, idCol, vecCol)
-    var cents = seedCents(v, k)
-    for (_ <- 1 to iters)
-      cents = updatedCents(assign(v, cents), cents)
-    (assign(v, cents).select(col("id"), col("cluster")), cents)
-  }
-
-  /** [[lloyd]] for corpus-scaled k (SemDeDup's prescription — see
-    * [[scaledK]]) — every iteration and the final pass assign through
-    * [[assignScan]]: ONE scan per pass, centroids riding the task
-    * closure as k×d primitive doubles, argmin in a tight loop per row.
-    * The three assignment faces (inline-literal [[assign]],
-    * broadcast-join [[assignJoin]], closure-scan [[assignScan]]) share
-    * the determinism contract (double cast, 6dp-rounded distance, ties
-    * to the lowest index, 6dp-rounded centroid means, lowest-id
-    * seeding), so for any (k, iters) they return IDENTICAL centroids
-    * and assignments (pinned in KMeansSpec) and
-    * [[oracleCtes]]/[[oracleCtesScaledK]] describe all of them.
-    *
-    * Why the scan face: the inline face's k×d expression literals hit
-    * codegen/plan-size ceilings at O(100s) of centroids, and the
-    * broadcast-join face — while shuffle-bounded — MATERIALIZES N×k
-    * intermediate rows per pass, each paying interpreted higher-order-
-    * function evaluation (zip_with + aggregate are not whole-stage-
-    * codegen'd) plus ObjectHashAggregate row handling. At the r18 10×
-    * rehearsal (N = 20k, scaled k = 200, 4 passes = 16M joined rows)
-    * that shape read 74× sf0.1's time; the closure scan does the same
-    * k·d flops per row with NO intermediate rows and NO aggregate,
-    * restoring ~linear scaling. Per iteration the only exchange left is
-    * the (cluster, dim) centroid-update aggregate, k·d groups. */
-  def lloydJoin(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int): (DataFrame, Seq[Seq[Double]]) = {
     require(k > 0, s"k must be > 0, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
@@ -96,15 +66,15 @@ object KMeans {
     }
   }
 
-  /** Closure-scan nearest-centroid assignment — the LARGE-k production
-    * face: (id, cluster, d) in one pass, no join, no aggregate, no N×k
-    * intermediates (rationale on [[lloydJoin]]). Centroids ship once
-    * per task as primitive arrays; per row the argmin loop replays
-    * EXACTLY the join face's arithmetic — squared diffs summed in dim
-    * order (bit-identical IEEE), sqrt, then the same
+  /** Nearest-centroid assignment: (id, cluster, d) in one pass, no
+    * join, no aggregate, no N×k intermediates. Centroids ship once per
+    * task as primitive arrays; per row the argmin loop sums squared
+    * diffs in dim order, takes the sqrt, then applies the same
     * BigDecimal-HALF_UP 6dp round Spark's `round()` applies, ties to
-    * the lowest centroid index — so all faces and the SQL oracle agree
-    * on every assignment (pinned in KMeansSpec). */
+    * the lowest centroid index — so it agrees with the SQL oracle on
+    * every assignment (pinned in KMeansSpec against a Catalyst argmin).
+    * A null vector, or one whose length differs from the centroids',
+    * fails the job with an IllegalArgumentException naming its id. */
   def assignScan(emb: DataFrame, idCol: String, vecCol: String,
       cents: Seq[Seq[Double]]): DataFrame =
     assignScanV(normalize(emb, idCol, vecCol), cents)
@@ -114,8 +84,14 @@ object KMeans {
       cents: Seq[Seq[Double]]): DataFrame = {
     require(cents.nonEmpty, "assignScan needs at least one centroid")
     val cs: Array[Array[Double]] = cents.map(_.toArray).toArray
-    val pick = udf { (vec: Seq[Double]) =>
+    val dim = cs(0).length
+    require(cs.forall(_.length == dim),
+      s"assignScan: centroids differ in length (${cs.map(_.length).distinct.mkString(", ")})")
+    val pick = udf { (id: Any, vec: Seq[Double]) =>
+      if (vec == null) throw new IllegalArgumentException(s"KMeans: vector $id is null")
       val x = vec.toArray
+      if (x.length != dim) throw new IllegalArgumentException(
+        s"KMeans: vector $id has length ${x.length}, centroids have length $dim")
       // pass 1 — unrounded min squared distance, pure flops. The exact
       // contract rounds each distance (BigDecimal via Double.toString —
       // the Catalyst Round semantics) BEFORE comparing, but rounding is
@@ -160,7 +136,7 @@ object KMeans {
       }
       (bi, bd)
     }
-    v.select(col("id"), col("v"), pick(col("v")).as("r"))
+    v.select(col("id"), col("v"), pick(col("id"), col("v")).as("r"))
       .select(col("id"), col("v"), col("r").getField("_1").as("cluster"),
         col("r").getField("_2").as("d"))
   }
@@ -189,7 +165,10 @@ object KMeans {
   private def seedCents(v: DataFrame, k: Int): IndexedSeq[Seq[Double]] = {
     val seed = v.orderBy(col("id")).limit(k).collect()
     require(seed.length == k, s"need at least $k vectors to seed, got ${seed.length}")
-    seed.map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
+    seed.map { r =>
+      require(!r.isNullAt(1), s"KMeans: vector ${r.get(0)} is null")
+      r.getSeq[Double](1).toIndexedSeq
+    }.toIndexedSeq
   }
 
   /** One centroid update from an assignment frame carrying (cluster, v):
@@ -208,103 +187,6 @@ object KMeans {
         c -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toIndexedSeq
       }
     cents.indices.map(i => upd.getOrElse(i, cents(i)))
-  }
-
-  /** Broadcast-join nearest-centroid assignment — the LARGE-k production
-    * face of [[assign]]. [[assign]] inlines k×d centroid doubles as
-    * expression literals, which is the right trick for a shuffle-free
-    * oracle-checkable k=10 but structurally caps k at O(100s) (codegen
-    * method limits, plan size); SemDeDup's own prescription scales k
-    * with the corpus (tens of thousands of clusters). Here centroids
-    * ride a BROADCAST DataFrame — k×d is DATA shipped once per
-    * executor, not expression text — so k scales until k·d stops
-    * fitting in a broadcast (~10⁷ doubles), with per-row cost the same
-    * brute-force k·d argmin either way.
-    *
-    * Plan shape: broadcast join — BroadcastNestedLoopJoin BuildRight,
-    * the only correct broadcast form for a KEYLESS row×all-centroids
-    * pairing (there is no equi-key for a hash join to dispatch on;
-    * each input partition needs every centroid) — then a per-id argmin
-    * aggregate with map-side partial combine, so the one exchange
-    * carries ≤ N pre-combined rows, never N×k. That single shuffle is
-    * the price of the join form vs [[assign]]'s pure scan — the right
-    * trade exactly when k is too large to inline. The argmin is the
-    * [[ArgMin]] typed Aggregator, NOT `min_by(cidx, struct(d, cidx))`:
-    * min_by's struct-typed ordering buffer is not hash-aggregable and
-    * falls back to SortAggregate, which would sort the N×k joined
-    * frame by id; the Aggregator plans hash-based ObjectHashAggregate
-    * (partial + final), no sort anywhere (pinned in ScaleSpec).
-    *
-    * Determinism contract is IDENTICAL to [[assign]] (double cast,
-    * 6dp-rounded distance, ties to the lowest centroid index), so for
-    * any centroid set the two faces return the same assignment frame
-    * and [[oracleCtes]] describes both (pinned in KMeansSpec).
-    */
-  def assignJoin(emb: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[Seq[Double]]): DataFrame =
-    assignJoinV(normalize(emb, idCol, vecCol), cents)
-
-  /** [[assignJoin]] over an already-normalized (id, v double[]) frame —
-    * the shared body [[lloydJoin]]'s iterations reuse. */
-  private def assignJoinV(v: DataFrame,
-      cents: Seq[Seq[Double]]): DataFrame =
-    assignJoinDistV(v, cents).drop("d")
-
-  /** [[assignJoin]] KEEPING the assigned distance: (id, cluster, d)
-    * with d the 6dp-rounded L2 distance to the chosen centroid. The
-    * distance rides the SAME single aggregate — `min(d)` alongside the
-    * argmin is exactly the chosen cluster's distance (ties share their
-    * rounded d by construction), so drift gating costs no extra pass.
-    * The [[graft.ops.IvfState]] incremental-assignment path reads this
-    * face. */
-  def assignJoinWithDist(emb: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[Seq[Double]]): DataFrame =
-    assignJoinDistV(normalize(emb, idCol, vecCol), cents)
-
-  private def assignJoinDistV(v: DataFrame,
-      cents: Seq[Seq[Double]]): DataFrame = {
-    require(cents.nonEmpty, "assignJoin needs at least one centroid")
-    val spark = v.sparkSession
-    import spark.implicits._
-    val cdf = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cidx", "cv")
-    val d2 = aggregate(
-      zip_with(col("v"), col("cv"), (a, b) => (a - b) * (a - b)),
-      lit(0d), (acc, x) => acc + x)
-    val argmin = udaf(new ArgMin)
-    v.join(broadcast(cdf))
-      .select(col("id"), col("cidx"), round(sqrt(d2), 6).as("d"))
-      .groupBy(col("id"))
-      .agg(argmin(col("d"), col("cidx")).as("cluster"), min(col("d")).as("d"))
-  }
-
-  /** Per-group argmin as a mergeable typed Aggregator: one (dist, cidx)
-    * pair of state, ordered (dist ASC, cidx ASC) — exactly [[assign]]'s
-    * struct-ordering tie rule. Distances arrive 6dp-rounded and
-    * non-NaN (sqrt of a sum of squares over cast doubles), so plain
-    * `<` comparison is total here. */
-  private class ArgMin extends Aggregator[(Double, Int), (Double, Int), Int] {
-    override def zero: (Double, Int) = (Double.PositiveInfinity, Int.MaxValue)
-    override def reduce(b: (Double, Int), a: (Double, Int)): (Double, Int) =
-      if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b
-    override def merge(a: (Double, Int), b: (Double, Int)): (Double, Int) =
-      reduce(a, b)
-    override def finish(b: (Double, Int)): Int = b._2
-    override def bufferEncoder: Encoder[(Double, Int)] =
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaInt)
-    override def outputEncoder: Encoder[Int] = Encoders.scalaInt
-  }
-
-  /** Shuffle-free nearest-centroid assignment: argmin over k inlined
-    * centroid literals via array_min on (rounded distance, index)
-    * structs — struct ordering IS the (dist ASC, idx ASC) tie rule. */
-  private def assign(v: DataFrame, cents: Seq[Seq[Double]]): DataFrame = {
-    val cand = cents.zipWithIndex.map { case (c, i) =>
-      val d2 = aggregate(
-        zip_with(col("v"), typedLit(c), (a, b) => (a - b) * (a - b)),
-        lit(0d), (acc, x) => acc + x)
-      struct(round(sqrt(d2), 6).as("d"), lit(i).as("i"))
-    }
-    v.withColumn("cluster", array_min(array(cand: _*)).getField("i"))
   }
 
   /** The DuckDB-SQL twin of [[lloyd]] + final assignment, unrolled

@@ -22,7 +22,7 @@ object EmbeddingQueries {
     * positive (cos ≥ τ) and negative (cos < τ) branches — in ONE
     * hash-aggregable pass: `max(CASE WHEN … THEN struct(cos, −nid))`
     * plans SortAggregate (struct aggregation buffers aren't
-    * hash-supported — the KMeans.ArgMin lesson), which at
+    * hash-supported), which at
     * scale sorts the full per-bucket candidate frame; this typed
     * Aggregator keeps one (cos, nid) pair per branch and plans
     * ObjectHashAggregate with map-side partial combine. Sentinel is
@@ -581,17 +581,17 @@ object EmbeddingQueries {
          SELECT d2 AS vec_id, min(cluster) AS cluster, round(max(cs), 6) AS max_cos
          FROM p WHERE cs >= 0.35 GROUP BY d2 ORDER BY vec_id""")),
 
-    // ---- q161's 100 TB face: SemDeDup with the broadcast-join
-    // assignment (KMeans.assignJoin — centroids as broadcast DATA, so k
-    // scales to SemDeDup's corpus-sized cluster counts; plan pinned in
-    // ScaleSpec) and a PER-CLUSTER PAIR CAP, the Dedup df-cap
-    // convention applied to the quadratic block: each vector is
-    // compared only against its cluster's `cap` lowest-id members (the
-    // representatives), so pair volume is Σ_c [cap·(s_c−cap) +
-    // cap·(cap−1)/2] ≤ N·cap — linear in N at fixed cap, vs q161's
-    // Σ s_c² which grows Θ(N²/k) when k is pinned. The recall exposure
-    // (which comparisons the cap skipped) is not hidden: q184 is the
-    // paired telemetry, same convention as q101 for the shingle cap.
+    // ---- q161's 100 TB face: SemDeDup with a PER-CLUSTER PAIR CAP
+    // (the assignment is lloyd's closure scan — centroids as task
+    // DATA, so k scales to SemDeDup's corpus-sized cluster counts), the
+    // Dedup df-cap convention applied to the quadratic block: each
+    // vector is compared only against its cluster's `cap` lowest-id
+    // members (the representatives), so pair volume is
+    // Σ_c [cap·(s_c−cap) + cap·(cap−1)/2] ≤ N·cap — linear in N at
+    // fixed cap, vs q161's Σ s_c² which grows Θ(N²/k) when k is pinned.
+    // The recall exposure (which comparisons the cap skipped) is not
+    // hidden: q184 is the paired telemetry, same convention as q101 for
+    // the shingle cap.
     // Semantics stay order-free and deterministic: drop v iff some
     // representative with LOWER id in v's cluster has raw cosine >=
     // 0.35; representatives are rank<=cap by id within cluster.
@@ -600,10 +600,8 @@ object EmbeddingQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val cap = 25
-        val (_, cents) = graft.ops.KMeans.lloyd(
+        val (asg, _) = graft.ops.KMeans.lloyd(
           t(s, d, "embeddings"), "vec_id", "embedding", k = 10, iters = 3)
-        val asg = graft.ops.KMeans.assignJoin(
-          t(s, d, "embeddings"), "vec_id", "embedding", cents)
         val n = vecs(s, d).join(asg, "id")
         // rank-by-id window is PARTITIONED by cluster (state bounded by
         // the largest cluster, the same bound the pair block already has)
@@ -682,10 +680,10 @@ object EmbeddingQueries {
     // SCALED WITH THE CORPUS (KMeans.scaledK — k = max(10, ⌈N/100⌉)),
     // so per-cluster blocks stay ~divisor-sized as N grows, instead of
     // Θ(N/10) under a pinned k = 10 (which quietly re-quadratizes the
-    // pair volume the clustering exists to kill). Training AND
-    // assignment run the broadcast-join face (KMeans.lloydJoin): at
-    // corpus-scaled k the inline-literal form hits codegen/plan-size
-    // ceilings, broadcast centroid DATA does not. k comes from a 1-row
+    // pair volume the clustering exists to kill). Training and
+    // assignment run KMeans.lloyd's closure scan: centroids are task
+    // DATA, not expression literals, so corpus-scaled k hits no
+    // codegen/plan-size ceiling. k comes from a 1-row
     // count — driver-sized by definition; k is plan state, like a
     // schema — and the oracle computes the SAME k in SQL (the kk CTE),
     // so ONE oracle string hash-matches at every SF under a DIFFERENT
@@ -699,7 +697,7 @@ object EmbeddingQueries {
         val cap = 25
         val emb = t(s, d, "embeddings")
         val k = graft.ops.KMeans.scaledK(emb.count())
-        val (asg, _) = graft.ops.KMeans.lloydJoin(
+        val (asg, _) = graft.ops.KMeans.lloyd(
           emb, "vec_id", "embedding", k, iters = 3)
         val n = vecs(s, d).join(asg, "id")
         val reps = n.withColumn("rn",
@@ -736,7 +734,7 @@ object EmbeddingQueries {
     // ---- incremental IVF: persisted centroids + ASSIGN-ONLY path
     // (ops.IvfState — the q90/q204 incremental pattern applied to ANN:
     // the quantizer is k·d parquet state, a new embedding batch pays
-    // ONE broadcast-join assignment pass, never a re-fit). Fit on the
+    // ONE closure-scan assignment pass, never a re-fit). Fit on the
     // even-id history slice, persist, reload, assign the odd-id "new
     // batch". Deterministic Lloyd (not MLlib) makes the whole
     // fit→persist→load→assign chain oracle-replayable: the oracle

@@ -121,7 +121,7 @@ class CentroidCoverageSpec extends SparkSpec {
     // the in-memory centroids (the persistence layer adds nothing)
     val viaState = IvfState.assignOnly(newHalf, "vec_id", "embedding", loaded)
       .orderBy(col("id")).as[(Long, Int, Double)].collect().toSeq
-    val direct = KMeans.assignJoinWithDist(newHalf, "vec_id", "embedding",
+    val direct = KMeans.assignScan(newHalf, "vec_id", "embedding",
         saved.cents).orderBy(col("id")).as[(Long, Int, Double)].collect().toSeq
     assert(viaState == direct && viaState.nonEmpty)
     // gate identity: the fit corpus drifts 1.0 against itself, no refit

@@ -50,54 +50,46 @@ class KMeansSpec extends SparkSpec {
     assert(a.orderBy("id").collect().toSeq == b.orderBy("id").collect().toSeq)
   }
 
-  test("assignJoin returns exactly the inline assignment (shared determinism contract)") {
-    val (asg, cents) = KMeans.lloyd(fixture, "vec_id", "embedding", k = 2, iters = 2)
-    val inline = asg.orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val joined = KMeans.assignJoin(fixture, "vec_id", "embedding", cents)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(joined == inline)
-  }
-
-  test("assignJoin ties break to the lowest centroid index, like assign") {
-    // two IDENTICAL centroids: every point ties on (rounded) distance,
-    // so the ArgMin aggregator's (dist ASC, cidx ASC) rule must put
-    // everything on index 0 — the same verdict the inline array_min
-    // struct ordering gives
-    val dupCents = Seq(Seq(1.0, 1.0), Seq(1.0, 1.0))
-    val asg = KMeans.assignJoin(fixture, "vec_id", "embedding", dupCents)
-    assert(asg.collect().map(_.getInt(1)).toSet == Set(0))
-  }
-
-  test("assignJoin scales k past the inline form's expression ceiling") {
+  test("assignScan assigns exactly at k = 600 centroids") {
     // 600 centroids: far beyond what k inlined literal branches should
-    // be asked to codegen, trivial as broadcast data — every vector
-    // must land on its nearest (here: centroid index == argmin by
+    // be asked to codegen, trivial as closure data — every vector must
+    // land on its nearest (here: centroid index == argmin by
     // construction, ties impossible)
     val k = 600
     val cents = (0 until k).map(i => Seq(i * 10.0, 0.0))
     val pts = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(4998.0f, 0.0f)),
       (2L, Seq(5992.0f, 0.0f))).toDF("vec_id", "embedding")
-    val got = KMeans.assignJoin(pts, "vec_id", "embedding", cents)
+    val got = KMeans.assignScan(pts, "vec_id", "embedding", cents)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == Map(0L -> 0, 1L -> 500, 2L -> 599))
   }
 
-  test("assignScan == assignJoin on real embeddings (rounding + tie parity)") {
-    // the closure-scan face hand-replicates round(sqrt(d2), 6)'s
-    // BigDecimal HALF_UP semantics — pin it against the Catalyst
-    // expression on all 2000 real vectors × 20 real centroids, distance
-    // included (the d column is where a rounding divergence would show
-    // first, before it ever flips an argmin)
+  test("assignScan == a Catalyst argmin on real embeddings (rounding + tie parity)") {
+    // the closure scan hand-replicates round(sqrt(d2), 6)'s BigDecimal
+    // HALF_UP semantics — pin it against the Catalyst expression on all
+    // real vectors × 20 real centroids, distance included (the d column
+    // is where a rounding divergence would show first, before it ever
+    // flips an argmin). The reference takes min(struct(d, cidx)) per
+    // id: struct ordering is the (dist ASC, idx ASC) tie rule.
     val emb = graft.queries.Tables(spark, sf, "embeddings")
     val (_, cents) = KMeans.lloyd(emb, "vec_id", "embedding", k = 20, iters = 2)
     val scan = KMeans.assignScan(emb, "vec_id", "embedding", cents)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    val join = KMeans.assignJoinWithDist(emb, "vec_id", "embedding", cents)
+    val cdf = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cidx", "cv")
+    val d2 = aggregate(
+      zip_with(col("v"), col("cv"), (a, b) => (a - b) * (a - b)),
+      lit(0d), (acc, x) => acc + x)
+    val ref = emb
+      .select(col("vec_id").as("id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      .crossJoin(cdf)
+      .groupBy(col("id"))
+      .agg(min(struct(round(sqrt(d2), 6).as("d"), col("cidx"))).as("m"))
       .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    assert(scan == join)
+      .map(r => (r.getLong(0), r.getStruct(1).getInt(1), r.getStruct(1).getDouble(0)))
+      .toSeq
+    assert(scan == ref)
     assert(scan.map(_._2).distinct.size > 1)
   }
 
@@ -107,18 +99,43 @@ class KMeansSpec extends SparkSpec {
     assert(asg.collect().map(_.getInt(1)).toSet == Set(0))
   }
 
-  test("lloydJoin == lloyd at the q203 scaled k (real embeddings, k = 20)") {
-    // the corpus-scaled-k face must land on the inline face's exact
-    // centroids and assignments — the shared determinism contract, pinned
-    // at the k the q203 registration actually uses at sf0.1
+  test("a null, short or long vector fails loudly, naming its id and lengths") {
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    val cents = Seq(Seq(0.0, 0.0), Seq(10.0, 10.0))
+    val bad = Seq(
+      (10L, Seq(1.0f)) -> "vector 10 has length 1, centroids have length 2",
+      (11L, Seq(1.0f, 2.0f, 3.0f)) -> "vector 11 has length 3, centroids have length 2",
+      (12L, null: Seq[Float]) -> "vector 12 is null")
+    for ((row, msg) <- bad) {
+      val df = fixture.union(Seq(row).toDF("vec_id", "embedding"))
+      // the lowest-id seeds are the valid fixture rows, so lloyd reaches
+      // the kernel: both entry points hit the same per-row check
+      for (run <- Seq(
+          () => KMeans.assignScan(df, "vec_id", "embedding", cents).collect(),
+          () => KMeans.lloyd(df, "vec_id", "embedding", k = 2, iters = 1)._1.collect())) {
+        val e = intercept[Exception](run())
+        assert(chain(e).exists {
+          case x: IllegalArgumentException => x.getMessage.contains(msg)
+          case _ => false
+        }, chain(e).map(_.toString).mkString(" | "))
+      }
+    }
+  }
+
+  test("lloyd centroids and assignments do not depend on shuffle partitions or AQE") {
+    // the centroid update sums doubles in shuffle order; the 6dp
+    // rounding must leave the same centroids at every width
     val emb = graft.queries.Tables(spark, sf, "embeddings")
-    val (asgA, centsA) = KMeans.lloyd(emb, "vec_id", "embedding", k = 20, iters = 2)
-    val (asgB, centsB) = KMeans.lloydJoin(emb, "vec_id", "embedding", k = 20, iters = 2)
-    assert(centsA == centsB)
-    val a = asgA.orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val b = asgB.orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(a == b)
-    assert(a.map(_._2).distinct.size > 1) // the pin is not vacuous
+    def run() = {
+      val (asg, cents) = KMeans.lloyd(emb, "vec_id", "embedding", k = 20, iters = 2)
+      (cents, asg.orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq)
+    }
+    val runs = Seq("1", "7", "13").map(p =>
+      under("spark.sql.shuffle.partitions" -> p)(run())) :+
+      under("spark.sql.adaptive.enabled" -> "false")(run())
+    runs.tail.foreach(r => assert(r == runs.head))
+    assert(runs.head._2.map(_._2).distinct.size > 1) // the pin is not vacuous
   }
 
   test("scaledK: kmin clamp below, integer ceil-div above") {

@@ -361,41 +361,17 @@ class ScaleSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("k-means assignment is shuffle-free (argmin over inlined centroids)") {
+  test("k-means assignment is shuffle-free") {
     // the q160 scale claim is a plan property: after the k×d seed
     // collect, nearest-centroid assignment must be pure scan-side work —
-    // no N×k crossJoin, no exchange (the argmin is array_min over
-    // centroid literals). iters=1 also exercises one update round; the
-    // RETURNED frame is the final assignment and must plan exchange-free.
+    // no N×k crossJoin, no exchange (the argmin runs per row over
+    // centroids shipped in the task closure). iters=1 also exercises one
+    // update round; the RETURNED frame is the final assignment and must
+    // plan exchange-free.
     val emb = Tables(spark, sf, "embeddings")
     val (asg, _) = graft.ops.KMeans.lloyd(emb, "vec_id", "embedding", k = 4, iters = 1)
     val plan = asg.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(800))
-  }
-
-  test("k-means broadcast-join assignment: broadcast data + hash argmin, no inlined centroids") {
-    // the q183 scale claim as a plan property: centroids must ride a
-    // BROADCAST (data shipped once per executor), with NO array_min
-    // over k inlined struct literals — the inline form's expression
-    // ceiling is exactly what assignJoin exists to remove. The join is
-    // BroadcastNestedLoopJoin BuildRight: a keyless row×all-centroids
-    // pairing has no equi-key for a BroadcastHashJoin to dispatch on,
-    // so BNLJ over the broadcast IS the hash-join-equivalent here.
-    val emb = Tables(spark, sf, "embeddings")
-    val cents = (0 until 12).map(i => Seq.fill(10)(i.toDouble))
-    val asg = graft.ops.KMeans.assignJoin(emb, "vec_id", "embedding", cents)
-    val plan = asg.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin BuildRight"), plan.take(900))
-    assert(!plan.contains("array_min"), plan.take(900))
-    // argmin must be the hash-based ObjectHashAggregate with a map-side
-    // partial (exchange carries <= N combined rows, never N*k) — the
-    // min_by(struct) formulation silently falls back to SortAggregate
-    // and sorts the whole N*k joined frame by id
-    assert(plan.contains("ObjectHashAggregate"), plan.take(900))
-    assert(plan.contains("partial_argmin"), plan.take(900))
-    assert(!plan.contains("SortAggregate"), plan.take(900))
-    assert(plan.linesIterator.count(l => l.contains("Exchange") &&
-      !l.contains("BroadcastExchange")) == 1, plan.take(900))
   }
 
   test("pivot/unpivot/rank-family plans: one exchange, Expand scan-side, one Window") {
