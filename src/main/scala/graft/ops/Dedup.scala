@@ -290,11 +290,11 @@ object Dedup {
     * — the pointer-jumping term turns O(diameter) convergence into
     * O(log diameter), which matters on chain-shaped near-dup graphs
     * (embedding chains at a loose threshold), not just dense clusters.
-    * The driver loop only reads each round's changed-label count. A
-    * round budget that runs out while labels still change throws an
-    * `IllegalStateException` naming `maxIter` and that count, instead
-    * of returning unconverged components. An edge with a null endpoint
-    * is dropped.
+    * The loop stops once a round changes no label. A round budget that
+    * runs out while labels still change throws an
+    * `IllegalStateException` naming `maxIter` and the last changed
+    * count, instead of returning unconverged components. An edge with a
+    * null endpoint is dropped.
     *
     * Scale shape: the symmetric edges are converted once into node →
     * distinct neighbors, keyed by [[Rounds.partitioner]] and persisted;
@@ -333,9 +333,7 @@ object Dedup {
     val edges = Rounds.edgeCache(
       rows.flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0)))), p)
     try {
-      // the start needs no job of its own: round 1's job materializes it
-      // with the edge cache
-      var labels: RDD[(Any, Any)] = seed match {
+      val start: RDD[(Any, Any)] = seed match {
         case None =>
           edges.mapPartitions(_.map { case (id, _) => (id, id: Any) }, preservesPartitioning = true)
         case Some(st) =>
@@ -349,11 +347,8 @@ object Dedup {
             if (nbrs.isEmpty) None else Some((id, seeded.foldLeft(id)(ord.min)))
           }, preservesPartitioning = true)
       }
-      var changed = 0L
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val l = labels
+      def round(prev: Rounds.Round[(Any, Any)]): Rounds.Round[(Any, Any)] = {
+        val l = prev.rdd
         // pointer jump on the round's input labels: re-keyed by label c,
         // every id labeled c hears label(c) when that is smaller — chains
         // halve every round, turning O(diameter) convergence into
@@ -370,22 +365,18 @@ object Dedup {
         // convergence is read off the checkpoint job itself: a marker
         // counts the labels that shrank this round; `prev` feeds the
         // marker only, the materialized state stays (id, component)
-        val next = Rounds.checkpoint(
+        Rounds.checkpoint(
           offers.union(jumps).reduceByKey(p,
-            (x, y) => (ord.min(x._1, y._1), if (x._2 != null) x._2 else y._2)),
-          release = Seq(l))(
+            (x, y) => (ord.min(x._1, y._1), if (x._2 != null) x._2 else y._2)))(
           x => (x._1, x._2._1), sums = Seq(x => if (ord.lt(x._2._1, x._2._2)) 1.0 else 0.0))
-        changed = next.sums(0).toLong
-        converged = changed == 0L
-        labels = next.rdd
-        iter += 1
       }
-      if (!converged) {
-        labels.unpersist(blocking = false)
-        throw new IllegalStateException(
+      // the start counts as all changed; it needs no job of its own: round
+      // 1's job materializes it with the edge cache
+      val labels = Rounds.iterate("connectedComponents",
+        Rounds.Round(start, sums = Vector(Double.PositiveInfinity)), maxIter)(round,
+        more = _.sums(0) > 0, unconverged = Some(last =>
           s"connected components did not converge within maxIter=$maxIter rounds: " +
-            s"the last round still changed $changed labels")
-      }
+            s"the last round still changed ${last.sums(0).toLong} labels")).rdd
       Rounds.frame(spark, labels.map { case (id, c) => Row(id, c) },
         ("id", t, true), ("component", t, true))
     } finally edges.unpersist(blocking = false): Unit

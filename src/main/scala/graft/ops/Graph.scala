@@ -158,11 +158,13 @@ object Graph {
     * fit when edges carry interaction counts (a user who mentioned an
     * item 50 times should push 50× the mass of a one-off). Duplicate
     * (src, dst) edges are weight-SUMMED (the multigraph reading, unlike
-    * [[pageRank]]'s simple-graph distinct); non-positive and null
+    * [[pageRank]]'s simple-graph distinct); null, zero and negative
     * weights are dropped (they would corrupt the out-mass denominator —
-    * a zero-weight edge is "no edge", a negative one is undefined).
-    * Nodes whose out-edges were all dropped become dangling and
-    * redistribute uniformly, exactly as unweighted dangling nodes do.
+    * a zero-weight edge is "no edge", a negative one is undefined), and
+    * a NaN or infinite weight fails the call with an
+    * `IllegalArgumentException` naming its edge. Nodes whose out-edges
+    * were all dropped become dangling and redistribute uniformly,
+    * exactly as unweighted dangling nodes do.
     *
     * Scale shape identical to [[pageRank]]: the weight-sum denominator
     * replaces the degree count in the same node base. */
@@ -172,7 +174,10 @@ object Graph {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val w = col(weightCol).cast("double")
-    val (rows, t) = Rounds.endpoints(edges.filter(w > 0), srcCol, dstCol, w) // drops null weights
+    // keeps NaN (Spark orders it above every number) and both infinities
+    // for the base build to reject
+    val (rows, t) = Rounds.endpoints(edges.filter(w > 0 || w === Double.NegativeInfinity),
+      srcCol, dstCol, w)
     uniformPageRank(edges, rows, t, weighted = true, iters, damping)
   }
 
@@ -183,7 +188,8 @@ object Graph {
       weighted: Boolean, iters: Int, damping: Double): DataFrame =
     withRankBase(edges, rows, weighted, None) { (b, p) =>
       val n = b.rows.toDouble
-      rankFrame(edges, t, rankRounds(b.rdd, p, _ => 1.0 / n, b.sums(0) * (1.0 / n), iters)(
+      rankFrame(edges, t, rankRounds(if (weighted) "weightedPageRank" else "pageRank", b.rdd, p,
+        _ => 1.0 / n, b.sums(0) * (1.0 / n), iters)(
         (in, _, dangling) => (1.0 - damping) / n + damping * (in + dangling / n)))
     }
 
@@ -215,8 +221,8 @@ object Graph {
       require(k > 0, "no seed appears in the graph")
       // static per-node teleport probability: 1/k on seeds, 0 elsewhere
       val tele = (seed: Boolean) => if (seed) 1.0 / k else 0.0
-      rankFrame(edges, t, rankRounds(b.rdd, p, nd => tele(nd.seed), b.sums(2) * (1.0 / k), iters)(
-        (in, seed, dangling) =>
+      rankFrame(edges, t, rankRounds("personalizedPageRank", b.rdd, p, nd => tele(nd.seed),
+        b.sums(2) * (1.0 / k), iters)((in, seed, dangling) =>
           (1.0 - damping) * tele(seed) + damping * (in + dangling * tele(seed))))
     }
   }
@@ -242,7 +248,10 @@ object Graph {
       m(d) = if (weighted) m.getOrElse(d, 0.0) + w else 1.0
     val nodes = rows
       .flatMap { r =>
-        Iterator((r.get(0), (r.get(1), if (weighted) r.getDouble(2) else 1.0)), (r.get(1), null))
+        val w = if (weighted) r.getDouble(2) else 1.0
+        require(!w.isNaN && !w.isInfinite,
+          s"weightedPageRank: edge (${r.get(0)}, ${r.get(1)}) has weight $w, not a finite number")
+        Iterator((r.get(0), (r.get(1), w)), (r.get(1), null))
       }
       .aggregateByKey(mutable.LinkedHashMap.empty[Any, Double], p)(
         (m, e) => { if (e != null) add(m, e._1, e._2); m },
@@ -259,39 +268,29 @@ object Graph {
     finally b.rdd.unpersist(blocking = false): Unit
   }
 
-  /** The round loop shared by the PageRank variants, on the materialized
+  /** The round step shared by the PageRank variants, on the materialized
     * node `base`. Each round joins the rank state to the base narrowly
     * (both keyed by `p`), emits one share per out-edge plus a zero share
     * that keeps every node's row, and sums them per node in ONE
     * `reduceByKey`; `rank` gives the next rank from the inbound sum, the
     * seed flag and the dangling mass. The round's [[Rounds.checkpoint]]
     * is its only job, and its dangling mass (the ranks of out = 0 nodes)
-    * is read off that job for the next round. The superseded state is
-    * released as soon as the next one is materialized. */
-  private def rankRounds(base: RDD[(Any, RankNode)], p: Partitioner, rank0: RankNode => Double,
-      dangling0: Double, iters: Int)(
-      rank: (Double, Boolean, Double) => Double): RDD[(Any, Double)] = {
-    var ranks: RDD[(Any, Double)] = base.mapValues(rank0)
-    var dangling = dangling0
-    for (_ <- 1 to iters) {
-      val d = dangling
-      val r = Rounds.checkpoint(
-        ranks.join(base)
+    * is read off that job for the next round. */
+  private def rankRounds(op: String, base: RDD[(Any, RankNode)], p: Partitioner,
+      rank0: RankNode => Double, dangling0: Double, iters: Int)(
+      rank: (Double, Boolean, Double) => Double): RDD[(Any, Double)] =
+    Rounds.iterate(op, Rounds.Round(base.mapValues(rank0), sums = Vector(dangling0)), iters) { s =>
+      val d = s.sums(0)
+      Rounds.checkpoint(
+        s.rdd.join(base)
           .flatMap { case (node, (rk, nd)) =>
             Iterator((node, (0.0, nd.out, nd.seed))) ++
               nd.dst.indices.iterator.map(j => (nd.dst(j), (rk * nd.w(j) / nd.out, -1.0, false)))
           }
           .reduceByKey(p, (x, y) => (x._1 + y._1, math.max(x._2, y._2), x._3 || y._3))
-          .mapValues { case (in, out, seed) => (rank(in, seed, d), out) },
-        release = Seq(ranks))(
+          .mapValues { case (in, out, seed) => (rank(in, seed, d), out) })(
         x => (x._1, x._2._1), sums = Seq(x => if (x._2._2 == 0) x._2._1 else 0.0))
-      ranks = r.rdd
-      dangling = r.sums(0)
-    }
-    // with no round the ranks are a view of the base, which the caller
-    // releases: materialize them on their own
-    if (iters == 0) Rounds.checkpoint(ranks)(identity).rdd else ranks
-  }
+    }.rdd
 
   /** The (node, rank) frame over the final rank state. */
   private def rankFrame(edges: DataFrame, t: DataType, ranks: RDD[(Any, Double)]): DataFrame =
@@ -334,24 +333,19 @@ object Graph {
       if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b
     }._1
     try {
-      var labels: RDD[(Any, Any)] =
-        nbrs.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
-      for (_ <- 1 to iters) {
-        val l = labels
-        labels = Rounds.checkpoint(
-          l.join(nbrs)
+      val start = nbrs.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
+      val labels = Rounds.iterate("labelPropagation", Rounds.Round(start), iters) { prev =>
+        Rounds.checkpoint(
+          prev.rdd.join(nbrs)
             .flatMap { case (_, (lab, ns)) =>
               val x = lab.asInstanceOf[Number].longValue
               ns.iterator.map((_, x))
             }
             .aggregateByKey(mutable.HashMap.empty[Long, Long], p)(
               (m, x) => { m(x) = m.getOrElse(x, 0L) + 1L; m },
-              (m, o) => { o.foreach { case (x, c) => m(x) = m.getOrElse(x, 0L) + c }; m }),
-          release = Seq(l))(x => (x._1, vote(x._2): Any)).rdd
-      }
-      // with no round the labels are a view of the edge cache, released
-      // below: materialize them on their own
-      if (iters == 0) labels = Rounds.checkpoint(labels)(identity).rdd
+              (m, o) => { o.foreach { case (x, c) => m(x) = m.getOrElse(x, 0L) + c }; m }))(
+          x => (x._1, vote(x._2): Any))
+      }.rdd
       Rounds.frame(spark, labels.map { case (v, l) => Row(v, l) },
         ("node", t, true), ("label", if (iters == 0) t else LongType, true))
     } finally nbrs.unpersist(blocking = false): Unit
@@ -446,7 +440,10 @@ object Graph {
     * weights keep the sums exact cross-engine (`dist` is bigint) — any
     * other numeric weight sums as a double and inherits the usual
     * float-sum caveat (round before comparing). Self-loops and edges
-    * with a null endpoint or a null weight are dropped.
+    * with a null endpoint or a null weight are dropped; a NaN weight
+    * fails the call with an `IllegalArgumentException` naming its edge
+    * (it has no order against a dist, so the least pair would depend on
+    * merge order), while +∞ is a valid weight.
     *
     * Scale shape: see [[hopRounds]]; the state is bounded by nodes ×
     * |seeds| — seeds are query-sized (landmarks), never corpus-sized.
@@ -510,8 +507,7 @@ object Graph {
     * every seed's (dist + w, node) to each neighbor, keeps the least
     * pair per (node, seed) in ONE map-side-combined `reduceByKey`, and
     * materializes it with one [[Rounds.checkpoint]] — one Spark job per
-    * hop. The out-lists are released in a finally and each superseded
-    * state as soon as the next one is materialized. */
+    * hop. */
   private def hopRounds[D](edges: DataFrame, seeds: DataFrame, maxHops: Int, aCol: String,
       bCol: String, directed: Boolean, w: Column, dt: DataType, withPred: Boolean)(
       implicit num: Numeric[D]): DataFrame = {
@@ -526,8 +522,10 @@ object Graph {
     val merge = (a: Seen, b: Seen) =>
       b.foldLeft(a) { case (m, (s, x)) => m.updated(s, m.get(s).fold(x)(least(_, x))) }
     val pred = (v: Any) => if (withPred) v.asInstanceOf[Number].longValue else -1L
+    val op = if (withPred) "shortestPathTree" else "bfsDistances"
     val out = rows.flatMap { r =>
       val (a, b, x) = (r.get(0), r.get(1), r.getAs[D](2))
+      require(!num.toDouble(x).isNaN, s"$op: edge ($a, $b) has weight NaN")
       if (a == b) Iterator.empty
       else Iterator((a, (b, x)), (b, if (directed) null else (a, x)))
     }.aggregateByKey(mutable.LinkedHashMap.empty[Any, D], p)(
@@ -540,24 +538,20 @@ object Graph {
       val st = seeds.toDF("seed").schema.head.dataType
       val named = seeds.toDF("seed").select(col("seed").cast(t).as("k"), col("seed"))
         .filter(col("k") === col("seed")).rdd.map(r => (r.get(0), r.get(1)))
-      var state: RDD[(Any, Seen)] = out.cogroup(named, p).flatMapValues { case (own, ss) =>
+      val start = out.cogroup(named, p).flatMapValues { case (own, ss) =>
         if (own.isEmpty || ss.isEmpty) None
         else Some(ss.iterator.map(_ -> ((num.zero, -1L))).toMap: Seen)
       }
-      for (_ <- 1 to maxHops) {
-        val s = state
-        state = Rounds.checkpoint(
-          s.join(out)
+      val state = Rounds.iterate(op, Rounds.Round(start), maxHops) { prev =>
+        Rounds.checkpoint(
+          prev.rdd.join(out)
             .flatMap { case (v, (seen, nbrs)) =>
               Iterator((v, seen)) ++ nbrs.iterator.map { case (u, x) =>
                 (u, seen.map { case (sd, (d, _)) => sd -> ((num.plus(d, x), pred(v))) }: Seen)
               }
             }
-            .reduceByKey(p, merge),
-          release = Seq(s))(identity).rdd
-      }
-      // with no hop the state is a view of the out-lists, released below
-      if (maxHops == 0) state = Rounds.checkpoint(state)(identity).rdd
+            .reduceByKey(p, merge))(identity)
+      }.rdd
       val cols = Seq(("node", t, true), ("seed", st, true), ("dist", dt, true)) ++
         (if (withPred) Seq(("pred", LongType, true)) else Nil)
       Rounds.frame(spark, state.flatMap { case (v, seen) =>
@@ -593,10 +587,8 @@ object Graph {
     * is the normalizer. Normalizing (Spark `round`'s HALF_UP at 6 dp,
     * [[round6]]) runs lazily over the materialized blocks, so a
     * half-step is one Spark job. An edge with a null endpoint is
-    * dropped. The returned frames read only checkpointed blocks, so the
-    * edge caches are released in a finally, and each superseded score
-    * state as soon as the next is materialized. Returns (hubs (u, h),
-    * authorities (i, a)) after `iters` full rounds. */
+    * dropped. Returns (hubs (u, h), authorities (i, a)) after `iters`
+    * full rounds. */
   def hits(edges: DataFrame, uCol: String = "u", iCol: String = "i",
       iters: Int = 2): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -610,37 +602,36 @@ object Graph {
     val byI = Rounds.edgeCache(byU.flatMap { case (u, is) => is.iterator.map((_, u)) }, p)
     // one half-step: sum the scores over the edges into the raw scores of
     // the other side, materialized with their max
-    def half(scores: RDD[(Any, Double)], adj: RDD[(Any, Array[Any])],
-        release: Seq[RDD[_]]): Rounds.Round[(Any, Double)] =
+    def half(scores: RDD[(Any, Double)], adj: RDD[(Any, Array[Any])]): Rounds.Round[(Any, Double)] =
       Rounds.checkpoint(
         scores.join(adj)
           .flatMap { case (_, (s, to)) => to.iterator.map(x => (x, s)) }
-          .reduceByKey(p, _ + _),
-        release)(identity, max = Some(_._2))
+          .reduceByKey(p, _ + _))(identity, max = Some(_._2))
     // max-normalized to 6 dp, applied lazily over the materialized blocks
     def normalized(r: Rounds.Round[(Any, Double)]): RDD[(Any, Double)] = {
       val m = r.max
       r.rdd.mapValues(x => round6(x / m))
     }
     try {
-      var h: RDD[(Any, Double)] = byU.mapValues(_ => 1.0)
-      var hub, auth: Rounds.Round[(Any, Double)] = null
-      var superseded: Seq[RDD[_]] = Nil
-      for (_ <- 1 to iters) {
-        auth = half(h, byU, superseded)
-        hub = half(normalized(auth), byI, Nil)
-        h = normalized(hub)
-        superseded = Seq(auth.rdd, hub.rdd)
+      // every hub starts at 1; the start's authority slot is never read
+      val h0 = Rounds.Round(byU.mapValues(_ => 1.0), max = 1.0)
+      val last = Rounds.iterate("hits", HitsRound(h0, h0), iters) { prev =>
+        val auth = half(normalized(prev.hub), byU)
+        HitsRound(auth, Rounds.releasing(auth.held)(half(normalized(auth), byI)))
       }
       def scores(r: Rounds.Round[(Any, Double)]): RDD[Row] =
         normalized(r).map { case (k, v) => Row(k, v) }
-      (Rounds.frame(spark, scores(hub), ("u", ut, true), ("h", DoubleType, true)),
-        Rounds.frame(spark, scores(auth), ("i", it, true), ("a", DoubleType, true)))
+      (Rounds.frame(spark, scores(last.hub), ("u", ut, true), ("h", DoubleType, true)),
+        Rounds.frame(spark, scores(last.auth), ("i", it, true), ("a", DoubleType, true)))
     } finally {
       byU.unpersist(blocking = false)
       byI.unpersist(blocking = false): Unit
     }
   }
+
+  /** A HITS round: its raw authority and hub half-steps. */
+  private final case class HitsRound(auth: Rounds.Round[(Any, Double)],
+      hub: Rounds.Round[(Any, Double)]) extends Rounds.State { def held = Seq(auth.rdd, hub.rdd) }
 
   /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
     * form of `x` (not on its binary value); NaN and infinities pass. */
@@ -683,33 +674,29 @@ object Graph {
     val spark = edges.sparkSession
     val p = Rounds.partitioner(spark)
     val (rows, t) = Rounds.endpoints(edges, aCol, bCol)
-    // the simple undirected graph as node -> distinct neighbors, self-loops
-    // dropped; a node's degree is its neighbor count
-    val und = undirected(rows)
     // the marker counts the nodes the NEXT peel would drop, so a state
     // that no round can change ends the loop without running that round
     // (peeling is monotone: a round that drops no node is an identity)
     val deficient: ((Any, Array[Any])) => Double = x => if (x._2.length < k) 1.0 else 0.0
-    var cur = Rounds.checkpoint(Rounds.adjacency(und, p))(identity, sums = Seq(deficient))
-    var r = 1
-    while (r <= maxRounds && cur.sums(0) > 0) {
-      val s = cur.rdd
+    // the simple undirected graph as node -> distinct neighbors, self-loops
+    // dropped; a node's degree is its neighbor count
+    val start = Rounds.checkpoint(Rounds.adjacency(undirected(rows), p))(identity,
+      sums = Seq(deficient))
+    // degrees of the subgraph as left after exactly maxRounds peels
+    // (the early exit only skips identity rounds)
+    val core = Rounds.iterate("kCore", start, maxRounds)({ prev =>
       // each dropped node tells its neighbors, the only rows that move
-      val gone = s.filter(_._2.length < k)
+      val gone = prev.rdd.filter(_._2.length < k)
         .flatMap { case (v, nbrs) => nbrs.iterator.map(w => (w, v)) }
-      cur = Rounds.checkpoint(
-        s.cogroup(gone, p).flatMapValues { case (own, lost) =>
+      Rounds.checkpoint(
+        prev.rdd.cogroup(gone, p).flatMapValues { case (own, lost) =>
           own.headOption.filter(_.length >= k).map { nbrs =>
             val drop = lost.toSet
             nbrs.filterNot(drop)
           }.filter(_.nonEmpty)
-        },
-        release = Seq(s))(identity, sums = Seq(deficient))
-      r += 1
-    }
-    // degrees of the subgraph as left after exactly maxRounds peels
-    // (the early exit only skips identity rounds)
-    Rounds.frame(spark, cur.rdd.map { case (v, nbrs) => Row(v, nbrs.length.toLong) },
+        })(identity, sums = Seq(deficient))
+    }, more = _.sums(0) > 0)
+    Rounds.frame(spark, core.rdd.map { case (v, nbrs) => Row(v, nbrs.length.toLong) },
       ("node", t, true), ("degree", LongType, false))
   }
 

@@ -33,7 +33,28 @@ import org.apache.spark.util.AccumulatorV2
   * cluster width — the same caveat `spark.sql.shuffle.partitions`
   * already carries.
   *
-  * [[checkpoint]] is the one materialization point of an RDD round: a
+  * [[iterate]] is the one round loop. An operator hands it a start
+  * state and a one-round step; the loop contract:
+  *  - it runs at most `rounds` steps, and stops before a step once
+  *    `more` reads false off the previous state's markers;
+  *  - a budget that runs out while `more` still holds returns the last
+  *    state (a documented truncation), or, with `unconverged` set,
+  *    throws an `IllegalStateException` carrying its message;
+  *  - each superseded state is released (every RDD it holds,
+  *    unpersisted without blocking) once the next one is materialized;
+  *    when a step throws, the live state is released and the exception
+  *    rethrown;
+  *  - when no round runs, a start that is still a view (of an edge cache
+  *    its caller releases) is materialized on its own, in one job;
+  *  - each round's job carries the description `<op> round <r>`; the
+  *    caller's description (null included) is restored on exit.
+  * The start may be a view that no job has run: round 1's job then
+  * materializes it with the round. The operator keeps its own edge
+  * cache, unpersists it when it returns, and builds its result frame
+  * over the final state: a finished call keeps only the blocks its
+  * result reads.
+  *
+  * [[checkpoint]] is the one materialization point of a round: a
   * marker pass over the state, an eager localCheckpoint and a count —
   * one job — returning the round's scalars (row count, exact sums, max)
   * read off that same job, so a loop pays no extra job for its node
@@ -52,10 +73,6 @@ import org.apache.spark.util.AccumulatorV2
   *    accumulators, so concurrent loops on one session (q145 runs
   *    PageRank and k-core on parallel threads) cannot see each
   *    other's rows.
-  * A loop hands the state a round supersedes to `release`, which
-  * unpersists it once the new round is materialized, and unpersists its
-  * edges when it returns: a finished call keeps only the blocks its
-  * result reads.
   */
 object Rounds {
 
@@ -65,19 +82,46 @@ object Rounds {
   def partitioner(spark: SparkSession): HashPartitioner =
     new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
-  /** A round's materialized state plus the scalars its checkpoint job
-    * read off the rows: the row count, one exact sum per `sums` function
-    * and the max of the `max` function (-Infinity when no row was
-    * marked). */
-  final case class Round[S](rdd: RDD[S], rows: Long, sums: IndexedSeq[Double], max: Double)
+  /** A round loop's state: the RDDs it holds. */
+  trait State { def held: Seq[RDD[_]] }
+
+  /** A round's state plus the scalars its checkpoint job read off the
+    * rows: the row count, one exact sum per `sums` function and the max
+    * of the `max` function (-Infinity when no row was marked). A start
+    * built without a job has no row count (-1) and carries the scalars
+    * its first round reads. */
+  final case class Round[S](rdd: RDD[S], rows: Long = -1L, sums: IndexedSeq[Double] = Vector(),
+      max: Double = Double.NegativeInfinity) extends State { def held: Seq[RDD[_]] = Seq(rdd) }
+
+  /** Run `step` from `start` under the loop contract above: at most
+    * `rounds` rounds while `more` holds; `unconverged` turns a budget
+    * that runs out while `more` still holds into an error. */
+  def iterate[S <: State](op: String, start: S, rounds: Int)(step: S => S,
+      more: S => Boolean = (_: S) => true, unconverged: Option[S => String] = None): S = {
+    val sc = start.held.head.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    var s = start
+    var r = 0
+    try releasing(s.held) {
+      while (r < rounds && more(s)) {
+        r += 1
+        sc.setJobDescription(s"$op round $r")
+        // the state a step supersedes goes once the step ends, failed or not
+        s = try step(s) finally release(s.held)
+      }
+      // only a start that no round ran on can still be a view
+      s.held.filter(_.getStorageLevel == StorageLevel.NONE).foreach(_.localCheckpoint().count())
+      unconverged.filter(_ => more(s)).foreach(msg => throw new IllegalStateException(msg(s)))
+      s
+    } finally sc.setJobDescription(caller)
+  }
 
   /** Materialize one round: mark each row of `state`, keep `keep` of it,
     * localCheckpoint, and count — exactly one Spark job for the state
-    * and all of its scalars. `release` names superseded states, which
-    * are unpersisted (non-blocking) once this one is materialized.
+    * and all of its scalars; a failed job leaves nothing persisted.
     * `keep` must not change a row's key: the marker pass preserves
     * `state`'s partitioner, so the next round still joins it narrowly. */
-  def checkpoint[T, S: ClassTag](state: RDD[T], release: Seq[RDD[_]] = Nil)(keep: T => S,
+  def checkpoint[T, S: ClassTag](state: RDD[T])(keep: T => S,
       sums: Seq[T => Double] = Nil, max: Option[T => Double] = None): Round[S] = {
     // fresh accumulators per call: concurrent loops on one session (q145
     // runs PageRank and k-core on parallel threads) never share one
@@ -88,12 +132,18 @@ object Rounds {
       marks.foreach { case (f, acc) => acc.add(f(x)) }
       keep(x)
     }, preservesPartitioning = true).localCheckpoint()
-    val rows = kept.count()
-    release.foreach(_.unpersist(blocking = false))
+    val rows = releasing(Seq(kept))(kept.count())
     val values = marks.map(_._2.value)
     Round(kept, rows, values.take(sums.size).toIndexedSeq,
       if (max.isEmpty) Double.NegativeInfinity else values.last)
   }
+
+  /** Unpersist `rdds` without blocking. */
+  private def release(rdds: Seq[RDD[_]]): Unit = rdds.foreach(_.unpersist(blocking = false))
+
+  /** `body`; if it throws, `rdds` (read then) are released first. */
+  private[ops] def releasing[A](rdds: => Seq[RDD[_]])(body: => A): A =
+    try body catch { case e: Throwable => release(rdds); throw e }
 
   /** `a` and `b` of `df` cast to their common type (the type a union of
     * the two columns takes), plus `extra` columns, as an RDD of rows;

@@ -8,11 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Graph, Rounds}
 
-/** The round-loop contract of [[graft.ops.Rounds.checkpoint]]: exact
-  * marker sums, outputs that do not depend on execution width, a fixed
-  * job count per round, superseded round state released, the parent
-  * DataFrame loops' output shapes and values, and a CC loop that fails
-  * loudly when its round budget runs out. */
+/** The round-loop contract of [[graft.ops.Rounds.iterate]] and
+  * [[graft.ops.Rounds.checkpoint]]: exact marker sums, outputs that do
+  * not depend on execution width, a fixed job count per round,
+  * superseded and failed round state released, the early stop and the
+  * budget policies, per-round job tags, the parent DataFrame loops'
+  * output shapes and values, non-finite weights rejected, and a CC loop
+  * that fails loudly when its round budget runs out. */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -304,6 +306,138 @@ class RoundsSpec extends SparkSpec {
     val spark6 = xs.toDF("x").select(round(col("x"), 6)).as[Double].collect().toSeq
     assert(xs.map(Graph.round6) == spark6)
   }
+
+  /** A throwable and its causes. */
+  private def chain(t: Throwable): Seq[Throwable] =
+    Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+
+  /** Marks the rows above 0: the early-stop tests' "more work" count. */
+  private def positive(r: Rounds.Round[Int]): Boolean = r.sums(0) > 0
+  private val above0: Int => Double = x => if (x > 0) 1.0 else 0.0
+
+  /** One round of the early-stop tests: every value drops by 3, to 0. */
+  private def lower(prev: Rounds.Round[Int]): Rounds.Round[Int] =
+    Rounds.checkpoint(prev.rdd.map(x => math.max(0, x - 3)))(identity, sums = Seq(above0))
+
+  test("iterate with zero rounds materializes a view start: one persisted RDD, in the result") {
+    val sc = spark.sparkContext
+    def lineage(rdd: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      rdd.dependencies.map(_.rdd).foldLeft(Set(rdd.id))(_ ++ lineage(_))
+    Sessions.sweep(spark)
+    val base = sc.parallelize(1 to 10, 3).map(x => (x, x)).persist()
+    val out = Rounds.iterate("zero", Rounds.Round(base.mapValues(_ * 2)), 0)(
+      _ => fail("no round runs"))
+    base.unpersist(blocking = true)
+    val result = out.rdd.map { case (k, v) => k + v }
+    assert(sc.getPersistentRDDs.keySet.toSet == Set(out.rdd.id))
+    assert(lineage(result).contains(out.rdd.id))
+    assert(result.collect().sorted.toSeq == (1 to 10).map(3 * _))
+    // a materialized start that no round may change costs no job of its own
+    val jobs = RoundsSpec.jobsOf(spark) {
+      val done = Rounds.checkpoint(sc.parallelize(Seq(0, 0), 2))(identity, sums = Seq(above0))
+      assert(Rounds.iterate("zero", done, 5)(_ => fail("no round runs"), more = positive) eq done)
+    }
+    assert(jobs == 1, s"$jobs jobs")
+    Sessions.sweep(spark)
+  }
+
+  test("iterate stops early once a marker reads 0; an exhausted budget truncates or throws") {
+    val sc = spark.sparkContext
+    def start(): Rounds.Round[Int] =
+      Rounds.checkpoint(sc.parallelize(1 to 8, 2))(identity, sums = Seq(above0))
+    Sessions.sweep(spark)
+    var steps = 0
+    val done = Rounds.iterate("lower", start(), 10)({ s => steps += 1; lower(s) }, more = positive)
+    // 8 reaches 0 in three rounds; a fourth would be an identity
+    assert(steps == 3 && done.sums(0) == 0.0 && done.rdd.collect().forall(_ == 0))
+    assert(sc.getPersistentRDDs.keySet.toSet == Set(done.rdd.id))
+    // the budget runs out with 7 and 8 still above 0
+    val cut = Rounds.iterate("lower", start(), 2)(lower, more = positive)
+    assert(cut.rdd.collect().sorted.toSeq == Seq(0, 0, 0, 0, 0, 0, 1, 2))
+    Sessions.sweep(spark)
+    val ex = intercept[IllegalStateException](Rounds.iterate("lower", start(), 2)(lower,
+      more = positive, unconverged = Some(s => s"${s.sums(0).toLong} values left")))
+    assert(ex.getMessage == "2 values left")
+    assert(sc.getPersistentRDDs.isEmpty, sc.getPersistentRDDs.toString)
+  }
+
+  test("a round that throws releases the live state and rethrows") {
+    val sc = spark.sparkContext
+    // round 3 fails inside its checkpoint job, or on the driver before it
+    for (inJob <- Seq(true, false)) {
+      Sessions.sweep(spark)
+      var steps = 0
+      val ex = intercept[Exception] {
+        Rounds.iterate("failing", Rounds.Round(sc.parallelize(1 to 20, 4).map(x => (x, x))), 5)({
+          prev =>
+            steps += 1
+            val r = steps
+            if (r == 3 && !inJob) throw new IllegalStateException("round 3 fails")
+            Rounds.checkpoint(prev.rdd.mapValues { x =>
+              if (r == 3) throw new IllegalStateException("round 3 fails") else x + 1
+            })(identity)
+        })
+      }
+      assert(steps == 3)
+      assert(chain(ex).exists(_.getMessage.contains("round 3 fails")), ex.toString)
+      assert(sc.getPersistentRDDs.isEmpty, s"inJob=$inJob: ${sc.getPersistentRDDs}")
+      assert(sc.getLocalProperty("spark.job.description") == null)
+    }
+  }
+
+  test("PageRank rejects NaN and infinite weights, BFS and SPT a NaN weight, naming the edge") {
+    def rejects(edge: String)(call: => Any): Unit = {
+      val ex = intercept[Exception](call)
+      assert(chain(ex).exists {
+        case x: IllegalArgumentException => x.getMessage.contains(edge)
+        case _ => false
+      }, chain(ex).map(_.toString).mkString(" | "))
+    }
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val w = Seq(("a", "b", 1.0), ("b", "c", bad), ("c", "a", 2.0), ("a", "d", 1.0))
+        .toDF("src", "dst", "weight")
+      rejects(s"edge (b, c) has weight $bad")(Graph.weightedPageRank(w, iters = 3).collect())
+    }
+    val g = Seq((1L, 2L, 1.0), (2L, 3L, Double.NaN), (3L, 4L, 1.0)).toDF("u1", "u2", "w")
+    val s = Seq(1L).toDF("s")
+    for (directed <- Seq(false, true)) {
+      rejects("edge (2, 3) has weight NaN")(Graph.bfsDistances(g, s, maxHops = 3,
+        directed = directed, weightCol = Some("w")).collect())
+      rejects("edge (2, 3) has weight NaN")(Graph.shortestPathTree(g, s, maxHops = 3,
+        directed = directed, weightCol = Some("w")).collect())
+    }
+    // +Infinity stays a valid weight: the far node is reached at +Infinity
+    val inf = Seq((1L, 2L, 1.0), (2L, 3L, Double.PositiveInfinity)).toDF("u1", "u2", "w")
+    assert(Graph.bfsDistances(inf, s, maxHops = 2, directed = true, weightCol = Some("w"))
+      .collect().map(_.toString).sorted.toSeq == Seq("[1,1,0.0]", "[2,1,1.0]", "[3,1,Infinity]"))
+  }
+
+  test("every round job is tagged `<op> round <r>`; the caller's description comes back") {
+    val sc = spark.sparkContext
+    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")).toDF("src", "dst")
+    val path = (0L until 23L).map(i => (i, i + 1)).toDF("d1", "d2")
+    for (caller <- Seq(null, "the caller")) {
+      sc.setJobDescription(caller)
+      try {
+        val descs = RoundsSpec.descriptionsOf(spark) {
+          Graph.pageRank(e, iters = 3).collect()
+          Dedup.connectedComponents(path).collect()
+          sc.parallelize(1 to 3).count(): Unit
+        }
+        def tagged(op: String): Seq[String] = descs.flatten.filter(_.startsWith(s"$op round "))
+        assert(tagged("pageRank") == (1 to 3).map(r => s"pageRank round $r"), descs.toString)
+        val cc = tagged("connectedComponents")
+        assert(cc.size > 1 && cc == cc.indices.map(r => s"connectedComponents round ${r + 1}"),
+          descs.toString)
+        // one job per round; every other job, and the job after the calls,
+        // carries the caller's description
+        assert(descs.count(_.exists(_.contains(" round "))) == 3 + cc.size, descs.toString)
+        assert(descs.filterNot(_.exists(_.contains(" round "))).forall(_ == Option(caller)),
+          descs.toString)
+        assert(descs.last == Option(caller))
+      } finally sc.setJobDescription(null)
+    }
+  }
 }
 
 object RoundsSpec {
@@ -323,6 +457,26 @@ object RoundsSpec {
       body
       ListenerBusDrain(spark.sparkContext)
       jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The description (`spark.job.description`) of each Spark job
+    * submitted while `body` runs, in submission order. */
+  def descriptionsOf(spark: SparkSession)(body: => Unit): Seq[Option[String]] = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
+        descs.add(jobStart.jobId ->
+          Option(jobStart.properties).flatMap(p => Option(p.getProperty("spark.job.description"))))
+        ()
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+      descs.toArray.toSeq.map(_.asInstanceOf[(Int, Option[String])]).sortBy(_._1).map(_._2)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
