@@ -5,15 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.GraftFunctions
-import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin, RewriteCosineTopK}
+import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin}
 
 /** Cluster-deploy registration point:
   *
   * {{{ spark.sql.extensions=graft.GraftExtensions }}}
   *
   * injects the custom as-of-join planner strategy, its filter-pushdown
-  * optimizer rule, the CosineTopK exact-vs-LSH rewrite rule, and
-  * graft's codegen SQL functions at session BUILD
+  * optimizer rule, and graft's codegen SQL functions at session BUILD
   * time — the production form of what the library otherwise does
   * per-session at runtime (`AsOfJoin.register` /
   * `GraftFunctions.register`, both idempotent, kept for notebooks and
@@ -27,7 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
-    ext.injectOptimizerRule(_ => RewriteCosineTopK)
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name), builder))

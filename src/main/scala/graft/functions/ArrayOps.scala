@@ -70,9 +70,15 @@ case class ArrayDot(left: Expression, right: Expression)
   * union over L tables is the standard recall lever when a single table's
   * collision probability is too low. offset=0 reproduces the original
   * single-table planes exactly.
+  *
+  * `planes` must lie in 1..63, one bit of the long bucket per plane:
+  * plane 64 would wrap onto bit 0 and merge buckets, and zero planes
+  * would put every vector in bucket 0. `dim` must be at least 1.
   */
 case class SignLsh(child: Expression, planes: Int, dim: Int, offset: Int = 0)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  require(planes >= 1 && planes <= 63, s"sign_lsh needs planes in 1..63, got planes = $planes")
+  require(dim >= 1, s"sign_lsh needs dim >= 1, got dim = $dim")
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "sign_lsh"

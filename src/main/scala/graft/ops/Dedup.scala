@@ -194,6 +194,29 @@ object Dedup {
     else joined.select(col("d1"), col("d2")).distinct()
   }
 
+  /** The exact check behind MinHash-LSH candidates: each `cand` row
+    * (d1 < d2, plus whatever the caller derived per pair) with the
+    * pair's shared-shingle count `c` (0 when it shares none) and both
+    * set sizes `n1`, `n2`, so any Jaccard-family ratio is one
+    * projection. Only the candidate docs' shingles are joined — the
+    * full-corpus self-join never runs — and they are localCheckpointed
+    * because the sizes and the self-join both re-read them. `sh` is
+    * (id, s), as [[shingles]] emits it. */
+  def candidateOverlap(sh: DataFrame, cand: DataFrame): DataFrame = {
+    val candDocs = cand.select(col("d1").as("id"))
+      .union(cand.select(col("d2").as("id"))).distinct()
+    val shC = sh.join(candDocs, "id").localCheckpoint(true)
+    val sizes = shC.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    val inter = shC.select(col("id").as("d1"), col("s"))
+      .join(shC.select(col("id").as("d2"), col("s").as("s2")),
+        col("s") === col("s2") && col("d1") < col("d2"))
+      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("c"))
+    cand
+      .join(inter, Seq("d1", "d2"), "left").na.fill(0L, Seq("c"))
+      .join(sizes.select(col("id").as("d1"), col("n").as("n1")), "d1")
+      .join(sizes.select(col("id").as("d2"), col("n").as("n2")), "d2")
+  }
+
   /** Batch ids that LSH-collide with the corpus — the incremental-ingest
     * primitive ("which of today's crawl near-dups against everything
     * already ingested"). Asymmetric on purpose: the corpus-side banded

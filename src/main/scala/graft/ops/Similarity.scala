@@ -24,32 +24,30 @@ object Similarity {
       .withColumn("nrm", expr("sqrt(array_dot(v, v))"))
   }
 
+  /** The module's cosine over a (va, qn) x (vb, nn) pair, rounded to
+    * 6dp before any ranking or threshold. */
+  private def cosSim: Column =
+    round(expr("array_dot(va, vb)") / (col("qn") * col("nn")), 6).as("cos_sim")
+
+  /** The module's top-k cut over (qid, nid, cos_sim) pairs: row_number
+    * per qid by (cos_sim DESC, nid ASC), keeping rn <= k. Checks k when
+    * the face is built, before any job runs. */
+  private def rankTopK(k: Int): DataFrame => DataFrame = {
+    require(k >= 1, s"cosine top-k needs k >= 1, got k = $k")
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
+    _.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+  }
+
   /** Exact top-k cosine neighbors for each vector matching
     * `queryFilter`, against the full frame. |Q| x N work, not N². */
   def cosineTopK(prepared: DataFrame, queryFilter: Column, k: Int): DataFrame = {
     val q = prepared.filter(queryFilter)
       .select(col("id").as("qid"), col("v").as("va"), col("nrm").as("qn"))
     val x = prepared.select(col("id").as("nid"), col("v").as("vb"), col("nrm").as("nn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
     q.join(x, col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(expr("array_dot(va, vb)") / (col("qn") * col("nn")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .select(col("qid"), col("nid"), cosSim)
+      .transform(rankTopK(k))
   }
-
-  /** Declarative cosine top-k: a Catalyst [[graft.plans.CosineTopKPlan]]
-    * node the optimizer rewrites to [[cosineTopK]] (exact, broadcast-NLJ
-    * shape) when the corpus size estimate is at or below
-    * `exactMaxBytes`, and to [[annTopK]] (sign-LSH buckets) above it —
-    * the exact-vs-sublinear choice as PLAN STATE instead of caller
-    * code. Identical output contract either way (qid, nid, cos_sim,
-    * rn; 6dp rounding; cos DESC, nid ASC ties); the face flip changes
-    * recall only, which is the documented LSH trade. */
-  def cosineTopKAuto(prepared: DataFrame, queryFilter: Column, k: Int,
-      planes: Int = 6, dim: Int = 64,
-      exactMaxBytes: Long = 256L << 20): DataFrame =
-    graft.plans.CosineTopK.auto(prepared, queryFilter, k, planes, dim, exactMaxBytes)
 
   /** [[cosineTopK]] re-planned through the mergeable
     * [[graft.ops.GroupTopK]] Aggregator instead of a window: the cosine
@@ -82,11 +80,10 @@ object Similarity {
   /** All pairs id1 < id2 with cosine >= threshold (the near-dup audit
     * path; run [[annTopK]] at scale). */
   def nearDupPairs(prepared: DataFrame, minCosine: Double): DataFrame = {
-    val a = prepared.select(col("id").as("d1"), col("v").as("va"), col("nrm").as("n1"))
-    val b = prepared.select(col("id").as("d2"), col("v").as("vb"), col("nrm").as("n2"))
+    val a = prepared.select(col("id").as("d1"), col("v").as("va"), col("nrm").as("qn"))
+    val b = prepared.select(col("id").as("d2"), col("v").as("vb"), col("nrm").as("nn"))
     a.join(b, col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        round(expr("array_dot(va, vb)") / (col("n1") * col("n2")), 6).as("cos_sim"))
+      .select(col("d1"), col("d2"), cosSim)
       .filter(col("cos_sim") >= minCosine)
   }
 
@@ -97,14 +94,39 @@ object Similarity {
   def lshNearDupPairs(prepared: DataFrame, minCosine: Double,
       planes: Int = 6, dim: Int = 64): DataFrame = {
     val e = withLshBucket(prepared, planes, dim)
-    val a = e.select(col("id").as("d1"), col("v").as("va"), col("nrm").as("n1"),
+    val a = e.select(col("id").as("d1"), col("v").as("va"), col("nrm").as("qn"),
       col("bucket"))
-    val b = e.select(col("id").as("d2"), col("v").as("vb"), col("nrm").as("n2"),
+    val b = e.select(col("id").as("d2"), col("v").as("vb"), col("nrm").as("nn"),
       col("bucket").as("bucket2"))
     a.join(b, col("bucket") === col("bucket2") && col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        round(expr("array_dot(va, vb)") / (col("n1") * col("n2")), 6).as("cos_sim"))
+      .select(col("d1"), col("d2"), cosSim)
       .filter(col("cos_sim") >= minCosine)
+  }
+
+  /** SemDeDup's in-cluster drop rule (Abbas et al. 2023,
+    * arXiv:2303.09540) over (id, v, nrm, cluster) rows: a member is
+    * dropped iff a representative with a LOWER id in its cluster has
+    * cosine >= 0.35 to it, so the lowest id is the kept one and the
+    * rule is order-free. Pass the members themselves as `reps` for the
+    * full rule, or a per-cluster capped subset to bound the pair block
+    * at cap x cluster size. Emits (vec_id, cluster, max_cos): each
+    * dropped id with its cluster and its strongest duplicate cosine.
+    * The threshold gates the UNROUNDED cosine and only the reported max
+    * is rounded to 6dp, so rounding-mode differences (Spark HALF_UP vs
+    * DuckDB HALF_EVEN) never decide membership at the cut. */
+  def semDedup(clustered: DataFrame, reps: DataFrame): DataFrame = {
+    val a = reps.select(col("id").as("d1"), col("v").as("va"),
+      col("nrm").as("na"), col("cluster"))
+    val b = clustered.select(col("id").as("d2"), col("v").as("vb"),
+      col("nrm").as("nb"), col("cluster"))
+    a.join(b, Seq("cluster"))
+      .filter(col("d1") < col("d2"))
+      .select(col("cluster"), col("d2"),
+        (expr("array_dot(va, vb)") / (col("na") * col("nb"))).as("cs"))
+      .filter(col("cs") >= 0.35)
+      .groupBy(col("d2"))
+      .agg(min(col("cluster")).as("cluster"), round(max(col("cs")), 6).as("max_cos"))
+      .select(col("d2").as("vec_id"), col("cluster"), col("max_cos"))
   }
 
   /** Corpus-scaled sign-LSH plane count: enough hyperplanes that the
@@ -147,6 +169,7 @@ object Similarity {
     * iterations); recall and rerank correctness are specced. */
   def ivfTopK(prepared: DataFrame, queryFilter: Column, k: Int,
       nlist: Int = 16, nprobe: Int = 4, fitSampleBp: Int = 2000): DataFrame = {
+    val rank = rankTopK(k) // checks k before the quantizer fit
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val withFeat = prepared.withColumn("feat", array_to_vector(col("v")))
@@ -191,12 +214,9 @@ object Similarity {
       .select(col("qid"), col("va"), col("qn"), col("center_cell").as("cell"))
     val members = assigned.select(col("id").as("nid"), col("v").as("vb"),
       col("nrm").as("nn"), col("cell").as("cell2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
     probes.join(members, col("cell") === col("cell2") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(expr("array_dot(va, vb)") / (col("qn") * col("nn")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .select(col("qid"), col("nid"), cosSim)
+      .transform(rank)
   }
 
   /** Approximate top-k: candidates share an LSH bucket, reranked by
@@ -208,12 +228,9 @@ object Similarity {
       .select(col("id").as("qid"), col("v").as("va"), col("nrm").as("qn"), col("bucket"))
     val x = e.select(col("id").as("nid"), col("v").as("vb"), col("nrm").as("nn"),
       col("bucket").as("bucket2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
     q.join(x, col("bucket") === col("bucket2") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(expr("array_dot(va, vb)") / (col("qn") * col("nn")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .select(col("qid"), col("nid"), cosSim)
+      .transform(rankTopK(k))
   }
 
   /** Per-group elementwise mean of the prepared vectors: (grp, centroid,
@@ -319,6 +336,7 @@ object Similarity {
     * 1+2+…+L_max table passes instead of L_max. */
   def hashTables(prepared: DataFrame, tables: Int,
       planes: Int = 6, dim: Int = 64): DataFrame = {
+    require(tables >= 1, s"LSH needs tables >= 1, got tables = $tables")
     graft.functions.GraftFunctions.register(prepared.sparkSession)
     val tb = explode(array((0 until tables).map(t =>
       struct(lit(t).as("tbl"),
@@ -337,14 +355,11 @@ object Similarity {
         col("tbl"), col("bucket"))
     val x = e.select(col("id").as("nid"), col("v").as("vb"), col("nrm").as("nn"),
       col("tbl").as("tbl2"), col("bucket").as("bucket2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
     q.join(x, col("tbl") === col("tbl2") && col("bucket") === col("bucket2") &&
         col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(expr("array_dot(va, vb)") / (col("qn") * col("nn")), 6).as("cos_sim"))
+      .select(col("qid"), col("nid"), cosSim)
       .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .transform(rankTopK(k))
   }
 
   /** Ratio-margin scoring for cross-side mining (the bitext-mining
@@ -375,13 +390,10 @@ object Similarity {
     val x = prepared.filter(!querySide)
       .select(col("id").as("nid"), col("v").as("vb"), col("nrm").as("nn"))
     val pairs = q.crossJoin(x)
-      .select(col("qid"), col("nid"),
-        round(expr("array_dot(va, vb)") / (col("qn") * col("nn")), 6).as("cos_sim"))
+      .select(col("qid"), col("nid"), cosSim)
       .withColumn("cos_l", round(col("cos_sim") * 1e6).cast("long"))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
     val wn = Window.partitionBy(col("nid")).orderBy(col("cos_sim").desc, col("qid"))
-    val keptQ = pairs.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
+    val keptQ = pairs.transform(rankTopK(k))
     val denomQ = keptQ.groupBy(col("qid").as("dq_id"))
       .agg(sum(col("cos_l")).as("den_q"), count(lit(1)).as("cnt_q"))
     val denomC = pairs.withColumn("rn2", row_number().over(wn))

@@ -160,20 +160,15 @@ object UserSimilarity {
     * materialized (LIBRARY.md "Session hygiene").
     *
     * The final per-query top-k runs through the mergeable
-    * [[graft.ops.GroupTopK]] Aggregator by default — map-side partial
+    * [[graft.ops.GroupTopK]] Aggregator — map-side partial
     * aggregation folds each input partition to ≤ k (sim, ou) pairs per
     * query user BEFORE the exchange, so the shuffle carries k·users
     * rows regardless of how many similarity pairs a hot user
     * accumulates, and no task ever sorts more than k·fan-in elements —
-    * the skew-immune form this pipeline advertises for 100 TB.
-    * `windowTopK = true` restores the `row_number().over(Window)`
-    * formulation (shuffles and sorts the FULL pair frame; kept for
-    * parity with the reference's driver-side sorted()[:5] semantics and
-    * pinned output-identical to the aggregator in PipelineSpec). Tie
-    * order in both: sim DESC then user id DESC (SURVEY §2.5 T1).
+    * the skew-immune form this pipeline advertises for 100 TB. Tie
+    * order: sim DESC then user id DESC (SURVEY §2.5 T1).
     */
-  def relationalTopK(events: DataFrame, queryMax: Int, k: Int = 5,
-      windowTopK: Boolean = false): DataFrame = {
+  def relationalTopK(events: DataFrame, queryMax: Int, k: Int = 5): DataFrame = {
     // cached: df, the corpus size m, and the weight projection all
     // re-read this aggregate
     val tf = events
@@ -202,25 +197,18 @@ object UserSimilarity {
       .join(broadcast(norms.select(col("user_id").as("qu"), col("nrm").as("nq"))), "qu")
       .join(broadcast(norms.select(col("user_id").as("ou"), col("nrm").as("no"))), "ou")
       .select(col("qu"), col("ou"), round(col("dot") / (col("nq") * col("no")), 6).as("sim"))
-    val ranked =
-      if (windowTopK) {
-        val w = Window.partitionBy(col("qu")).orderBy(col("sim").desc, col("ou").desc)
-        sims.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-          .select(col("qu"), col("ou"), col("sim"), col("rn"))
-      } else {
-        val spark = sims.sparkSession
-        import spark.implicits._
-        sims.select(col("qu"), col("sim"), col("ou")).as[(Long, Double, Long)]
-          .groupByKey(_._1)
-          .mapValues(r => (r._2, r._3))
-          .agg(new graft.ops.GroupTopK[Long](k).toColumn.name("top"))
-          .flatMap { case (qu, top) =>
-            top.iterator.zipWithIndex.map { case ((sim, ou), i) =>
-              (qu, ou, sim, i + 1)
-            }
-          }
-          .toDF("qu", "ou", "sim", "rn")
+    val spark = sims.sparkSession
+    import spark.implicits._
+    sims.select(col("qu"), col("sim"), col("ou")).as[(Long, Double, Long)]
+      .groupByKey(_._1)
+      .mapValues(r => (r._2, r._3))
+      .agg(new graft.ops.GroupTopK[Long](k).toColumn.name("top"))
+      .flatMap { case (qu, top) =>
+        top.iterator.zipWithIndex.map { case ((sim, ou), i) =>
+          (qu, ou, sim, i + 1)
+        }
       }
-    ranked.orderBy(col("qu"), col("rn"))
+      .toDF("qu", "ou", "sim", "rn")
+      .orderBy(col("qu"), col("rn"))
   }
 }

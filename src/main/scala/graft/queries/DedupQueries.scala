@@ -167,18 +167,7 @@ object DedupQueries {
           .select(col("d1"), col("d2"),
             round(expr("size(filter(zip_with(sig1, sig2, (a, b) -> a = b), x -> x))")
               .cast("double") / K, 4).as("est_jaccard"))
-        val candDocs = cand.select(col("d1").as("id"))
-          .union(cand.select(col("d2").as("id"))).distinct()
-        val shC = sh.join(candDocs, "id").localCheckpoint(true)
-        val sizes = shC.groupBy(col("id")).agg(count(lit(1)).as("n"))
-        val inter = shC.select(col("id").as("d1"), col("s"))
-          .join(shC.select(col("id").as("d2"), col("s").as("s2")),
-            col("s") === col("s2") && col("d1") < col("d2"))
-          .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("c"))
-        est
-          .join(inter, Seq("d1", "d2"), "left").na.fill(0L, Seq("c"))
-          .join(sizes.select(col("id").as("d1"), col("n").as("n1")), "d1")
-          .join(sizes.select(col("id").as("d2"), col("n").as("n2")), "d2")
+        Dedup.candidateOverlap(sh, est)
           .select(col("d1"), col("d2"), col("est_jaccard"),
             round(col("c").cast("double") / (col("n1") + col("n2") - col("c")), 6).as("jaccard"))
           .orderBy(col("d1"), col("d2"))
@@ -1653,18 +1642,7 @@ object DedupQueries {
         val est = cand.select(col("d1"), col("d2"),
           expr("size(filter(zip_with(sig1, sig2, (a, b) -> a = b), x -> x))")
             .cast("long").as("agree"))
-        val candDocs = cand.select(col("d1").as("id"))
-          .union(cand.select(col("d2").as("id"))).distinct()
-        val shC = sh.join(candDocs, "id").localCheckpoint(true)
-        val sizes = shC.groupBy(col("id")).agg(count(lit(1)).as("n"))
-        val inter = shC.select(col("id").as("d1"), col("s"))
-          .join(shC.select(col("id").as("d2"), col("s").as("s2")),
-            col("s") === col("s2") && col("d1") < col("d2"))
-          .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("c"))
-        est
-          .join(inter, Seq("d1", "d2"), "left").na.fill(0L, Seq("c"))
-          .join(sizes.select(col("id").as("d1"), col("n").as("n1")), "d1")
-          .join(sizes.select(col("id").as("d2"), col("n").as("n2")), "d2")
+        Dedup.candidateOverlap(sh, est)
           .groupBy(col("agree"))
           .agg(count(lit(1)).as("n_pairs"),
             sum(col("c")).as("sum_inter"),
@@ -1759,18 +1737,7 @@ object DedupQueries {
             .cast("long").as("agree"),
           expr("size(filter(zip_with(sig1, sig2, (a, b) -> a = b), x -> x))")
             .cast("long").as("agree64"))
-        val candDocs = cand.select(col("d1").as("id"))
-          .union(cand.select(col("d2").as("id"))).distinct()
-        val shC = sh.join(candDocs, "id").localCheckpoint(true)
-        val sizes = shC.groupBy(col("id")).agg(count(lit(1)).as("n"))
-        val inter = shC.select(col("id").as("d1"), col("s"))
-          .join(shC.select(col("id").as("d2"), col("s").as("s2")),
-            col("s") === col("s2") && col("d1") < col("d2"))
-          .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("c"))
-        est
-          .join(inter, Seq("d1", "d2"), "left").na.fill(0L, Seq("c"))
-          .join(sizes.select(col("id").as("d1"), col("n").as("n1")), "d1")
-          .join(sizes.select(col("id").as("d2"), col("n").as("n2")), "d2")
+        Dedup.candidateOverlap(sh, est)
           .groupBy(col("agree"))
           .agg(count(lit(1)).as("n_pairs"),
             sum(col("agree64")).as("sum_a64"),

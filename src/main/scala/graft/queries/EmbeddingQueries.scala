@@ -84,17 +84,11 @@ object EmbeddingQueries {
   val all: Seq[GraftQuery] = Seq(
 
     // ---- brute-force cosine top-5 for a fixed query subset (|Q| x N
-    // work, not N²; at cluster scale Q is the query batch). Expressed
-    // through the declarative CosineTopKPlan node since r19: the
-    // optimizer rewrite picks the face by corpus size, and the 1 GiB
-    // threshold pins THIS registration to the exact face at every test
-    // SF — same plan, same hashes as the direct cosineTopK call
-    // (CosineTopKSpec asserts both the rewrite choice and the
-    // row-for-row identity).
+    // work, not N²; at cluster scale Q is the query batch): the exact
+    // face, a broadcast nested-loop join ranked by a per-query window.
     GraftQuery(
       "q40_embed_topk",
-      (s, d) => Similarity.cosineTopKAuto(vecs(s, d), col("id") < 20, k = 5,
-          exactMaxBytes = 1L << 30)
+      (s, d) => Similarity.cosineTopK(vecs(s, d), col("id") < 20, k = 5)
         .select(col("qid"), col("nid"), col("cos_sim"), col("rn"))
         .orderBy(col("qid"), col("rn")),
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -202,14 +196,11 @@ object EmbeddingQueries {
     // ---- LSH-bucketed ANN: corpus-scaled deterministic sign
     // hyperplanes (Similarity.scaledPlanes — ~64-vector expected
     // buckets at any SF); candidates share a bucket; exact cosine
-    // rerank top-3. Expressed through the declarative CosineTopKPlan
-    // node since r19 with threshold 0 — every corpus size estimate
-    // exceeds it, so the rewrite always picks the sign-LSH face here:
-    // same plan, same hashes as the direct annTopK call.
+    // rerank top-3 through the same window ranker as q40.
     GraftQuery(
       "q42_ann_lsh",
-      (s, d) => Similarity.cosineTopKAuto(vecs(s, d), col("id") < 50, k = 3,
-          planes = nPlanes(s, d), exactMaxBytes = 0L)
+      (s, d) => Similarity.annTopK(vecs(s, d), col("id") < 50, k = 3,
+          planes = nPlanes(s, d))
         .select(col("qid"), col("nid"), col("cos_sim"), col("rn"))
         .orderBy(col("qid"), col("rn")),
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -500,10 +491,11 @@ object EmbeddingQueries {
     // ---- q40 re-answered through the mergeable GroupTopK Aggregator
     // (Similarity.cosineTopKAgg — scale rationale there): the cosine
     // pair frame folds to k rows per query map-side, so the top-k
-    // exchange is k·|Q| rows instead of |Q|×N — the q105-vs-q04 cross-
-    // check dropped onto the similarity path, with a STRING-free but
-    // reversed-tie instantiation proving the generic Aggregator. Oracle
-    // = q40's SQL verbatim; the two formulations must hash identically.
+    // exchange is k·|Q| rows — the q105-vs-q04 cross-check dropped onto
+    // the similarity path, with a STRING-free but reversed-tie
+    // instantiation proving the generic Aggregator. Oracle = q40's SQL
+    // verbatim; q40's window face and this one must hash identically
+    // (ScaleSpec pins the aggregator plan).
     GraftQuery(
       "q122_topk_agg_cosine",
       (s, d) => Similarity.cosineTopKAgg(vecs(s, d), col("id") < 20, k = 5)
@@ -542,35 +534,15 @@ object EmbeddingQueries {
     // clustering turns the N² all-pairs cosine into k independent
     // (N/k)² blocks, which is the whole trick that makes embedding
     // dedup feasible at corpus scale (the q42/q63 LSH buckets, with
-    // learned buckets). A vector is dropped iff a LOWER-id vector in
-    // its cluster has cosine >= 0.35 — lowest id is the kept
-    // representative, so the rule is order-free and deterministic.
-    // Output: the dropped ids with their cluster and the strongest
-    // in-cluster duplicate cosine (threshold on the raw cosine, 6dp
-    // rounding on the reported max only).
+    // learned buckets). Every member is a representative here; the
+    // drop rule and its output are Similarity.semDedup's.
     GraftQuery(
       "q161_semantic_dedup",
       (s, d) => {
         val (asg, _) = graft.ops.KMeans.lloyd(
           t(s, d, "embeddings"), "vec_id", "embedding", k = 10, iters = 3)
         val n = vecs(s, d).join(asg, "id")
-        val a = n.select(col("id").as("d1"), col("v").as("va"),
-          col("nrm").as("na"), col("cluster"))
-        val b = n.select(col("id").as("d2"), col("v").as("vb"),
-          col("nrm").as("nb"), col("cluster"))
-        // threshold gate on the UNROUNDED cosine; 6dp rounding only on
-        // the reported max — rounding-mode differences (Spark HALF_UP vs
-        // DuckDB HALF_EVEN) must never decide set membership at the cut
-        a.join(b, Seq("cluster"))
-          .filter(col("d1") < col("d2"))
-          .select(col("cluster"), col("d2"),
-            (expr("array_dot(va, vb)") / (col("na") * col("nb"))).as("cs"))
-          .filter(col("cs") >= 0.35)
-          .groupBy(col("d2"))
-          .agg(min(col("cluster")).as("cluster"),
-            round(max(col("cs")), 6).as("max_cos"))
-          .select(col("d2").as("vec_id"), col("cluster"), col("max_cos"))
-          .orderBy(col("vec_id"))
+        Similarity.semDedup(n, reps = n).orderBy(col("vec_id"))
       },
       Some(graft.ops.KMeans.oracleCtes(k = 10, iters = 3) + s""",
          n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, cluster
@@ -608,20 +580,7 @@ object EmbeddingQueries {
         val reps = n.withColumn("rn",
             row_number().over(Window.partitionBy(col("cluster")).orderBy(col("id"))))
           .filter(col("rn") <= cap)
-        val a = reps.select(col("id").as("d1"), col("v").as("va"),
-          col("nrm").as("na"), col("cluster"))
-        val b = n.select(col("id").as("d2"), col("v").as("vb"),
-          col("nrm").as("nb"), col("cluster"))
-        a.join(b, Seq("cluster"))
-          .filter(col("d1") < col("d2"))
-          .select(col("cluster"), col("d2"),
-            (expr("array_dot(va, vb)") / (col("na") * col("nb"))).as("cs"))
-          .filter(col("cs") >= 0.35)
-          .groupBy(col("d2"))
-          .agg(min(col("cluster")).as("cluster"),
-            round(max(col("cs")), 6).as("max_cos"))
-          .select(col("d2").as("vec_id"), col("cluster"), col("max_cos"))
-          .orderBy(col("vec_id"))
+        Similarity.semDedup(n, reps).orderBy(col("vec_id"))
       },
       Some(graft.ops.KMeans.oracleCtes(k = 10, iters = 3) + s""",
          n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, cluster
@@ -703,20 +662,7 @@ object EmbeddingQueries {
         val reps = n.withColumn("rn",
             row_number().over(Window.partitionBy(col("cluster")).orderBy(col("id"))))
           .filter(col("rn") <= cap)
-        val a = reps.select(col("id").as("d1"), col("v").as("va"),
-          col("nrm").as("na"), col("cluster"))
-        val b = n.select(col("id").as("d2"), col("v").as("vb"),
-          col("nrm").as("nb"), col("cluster"))
-        a.join(b, Seq("cluster"))
-          .filter(col("d1") < col("d2"))
-          .select(col("cluster"), col("d2"),
-            (expr("array_dot(va, vb)") / (col("na") * col("nb"))).as("cs"))
-          .filter(col("cs") >= 0.35)
-          .groupBy(col("d2"))
-          .agg(min(col("cluster")).as("cluster"),
-            round(max(col("cs")), 6).as("max_cos"))
-          .select(col("d2").as("vec_id"), col("cluster"), col("max_cos"))
-          .orderBy(col("vec_id"))
+        Similarity.semDedup(n, reps).orderBy(col("vec_id"))
       },
       Some(graft.ops.KMeans.oracleCtesScaledK(kmin = 10, divisor = 100, iters = 3) + s""",
          n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, cluster

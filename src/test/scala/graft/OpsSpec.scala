@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{MinHashSignature, Portable, TextPipeline}
+import graft.ops.{MinHashSignature, Portable, Similarity, TextPipeline}
 import graft.queries.Tables
 
 /** Cross-checks for the custom ops: the typed MinHash Aggregator against
@@ -257,6 +257,66 @@ class OpsSpec extends SparkSpec {
     val bruteSet = brute.map(t => (t._1, t._2)).toSet
     val hit = ivf.count(t => bruteSet.contains((t._1, t._2)))
     assert(hit > 0, s"IVF recalled 0 of ${bruteSet.size} true top-5 pairs")
+  }
+
+  test("top-k faces reject k < 1 and LSH tables < 1, naming the value") {
+    val prepared = Similarity.prepare(Tables(spark, sf, "embeddings"))
+    val q = col("id") < 5
+    Seq[(String, () => Any)](
+      "k = 0" -> (() => Similarity.cosineTopK(prepared, q, k = 0)),
+      "k = 0" -> (() => Similarity.annTopK(prepared, q, k = 0)),
+      "k = -1" -> (() => Similarity.ivfTopK(prepared, q, k = -1)),
+      "k = 0" -> (() => Similarity.annTopKTables(prepared, q, k = 0)),
+      "tables = 0" -> (() => Similarity.annTopKTables(prepared, q, k = 3, tables = 0)),
+      "tables = -2" -> (() => Similarity.hashTables(prepared, tables = -2))
+    ).foreach { case (msg, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
+
+  private def chain(t: Throwable): Seq[Throwable] =
+    Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+
+  private def assertRejects(msg: String)(build: => Any): Unit = {
+    val e = intercept[Exception](build)
+    assert(chain(e).exists {
+      case x: IllegalArgumentException => x.getMessage.contains(msg)
+      case _ => false
+    }, chain(e).map(_.toString).mkString(" | "))
+  }
+
+  test("SignLsh built from Scala rejects planes outside 1..63 and dim < 1") {
+    val prepared = Similarity.prepare(Tables(spark, sf, "embeddings"))
+    assertRejects("planes = 64")(Similarity.withLshBucket(prepared, planes = 64))
+    assertRejects("planes = 0")(Similarity.annTopK(prepared, col("id") < 5, k = 3, planes = 0))
+    assertRejects("dim = 0")(Similarity.hashTables(prepared, tables = 2, dim = 0))
+  }
+
+  test("sign_lsh called from SQL rejects planes outside 1..63 and dim < 1") {
+    graft.functions.GraftFunctions.register(spark)
+    assertRejects("planes = 64")(
+      spark.sql("SELECT sign_lsh(array(1.0D, -1.0D), 64, 64)").collect())
+    assertRejects("planes = 0")(
+      spark.sql("SELECT sign_lsh(array(1.0D, -1.0D), 0, 64)").collect())
+    assertRejects("dim = 0")(
+      spark.sql("SELECT sign_lsh(array(1.0D, -1.0D), 4, 0)").collect())
+  }
+
+  test("top-k and near-dup rows match across shuffle widths and AQE off") {
+    val prepared = Similarity.prepare(Tables(spark, sf, "embeddings")).cache()
+    def run(): Seq[Seq[String]] = Seq(
+      Similarity.cosineTopK(prepared, col("id") < 20, k = 5),
+      Similarity.annTopK(prepared, col("id") < 50, k = 3, planes = 4),
+      Similarity.annTopKTables(prepared, col("id") < 50, k = 3, tables = 4, planes = 4),
+      Similarity.nearDupPairs(prepared, minCosine = 0.35)
+    ).map(_.collect().map(_.toString).toSeq.sorted)
+    val runs = Seq("1", "7", "13").map(p =>
+      under("spark.sql.shuffle.partitions" -> p)(run())) :+
+      under("spark.sql.adaptive.enabled" -> "false")(run())
+    runs.tail.foreach(r => assert(r == runs.head))
+    runs.head.foreach(rows => assert(rows.nonEmpty)) // the pin is not vacuous
+    prepared.unpersist()
   }
 
   test("kaplanMeier: hand-computed survival on a censored fixture") {

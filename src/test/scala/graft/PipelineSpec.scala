@@ -93,23 +93,6 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("relationalTopK: window and GroupTopK aggregator forms are output-identical") {
-    // the flagship q51 path defaults to the mergeable aggregator (the
-    // skew-immune 100 TB form); the window formulation stays available
-    // for reference parity — same ranking, same ties (sim DESC, ou
-    // DESC), row-for-row. Includes rn: tie ORDER must match, not just
-    // top-5 membership (both rank on the 6dp-rounded sim).
-    val events = Tables(spark, sf, "events")
-    val agg = UserSimilarity.relationalTopK(events, queryMax = 30)
-      .select($"qu", $"ou", $"sim", $"rn")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    val win = UserSimilarity.relationalTopK(events, queryMax = 30, windowTopK = true)
-      .select($"qu", $"ou", $"sim", $"rn")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    assert(agg.nonEmpty)
-    assert(agg == win)
-  }
-
   test("W1 CountVectorizer cosine agrees with relational count cosine (q79)") {
     // the test corpora hold 100 distinct items < vocabSize=200, so the
     // vocab cap binds in neither path and the two cosines are the same
