@@ -95,9 +95,9 @@ object Similarity {
       planes: Int = 6, dim: Int = 64): DataFrame = {
     val e = withLshBucket(prepared, planes, dim)
     val a = e.select(col("id").as("d1"), col("v").as("va"), col("nrm").as("qn"),
-      col("bucket"))
+      bucketKey(-1L).as("bucket"))
     val b = e.select(col("id").as("d2"), col("v").as("vb"), col("nrm").as("nn"),
-      col("bucket").as("bucket2"))
+      bucketKey(-2L).as("bucket2"))
     a.join(b, col("bucket") === col("bucket2") && col("d1") < col("d2"))
       .select(col("d1"), col("d2"), cosSim)
       .filter(col("cos_sim") >= minCosine)
@@ -159,6 +159,19 @@ object Similarity {
     graft.functions.GraftFunctions.register(prepared.sparkSession)
     prepared.withColumn("bucket", expr(s"sign_lsh(v, $planes, $dim)"))
   }
+
+  /** The `bucket` column as a join key that is never null. A null
+    * vector's bucket is null ([[graft.functions.SignLsh]] is nullable
+    * exactly when its input is) and matches nothing under `bucket =
+    * bucket2`; here it becomes `sentinel`, and the two join sides pass
+    * different negative sentinels (real buckets are >= 0), so it still
+    * matches nothing. Over a nullable bucket Catalyst infers
+    * `isnotnull(bucket)` from the join and pushes it below the
+    * projection that computes the bucket, casting and hashing each
+    * corpus row twice; a non-nullable key leaves nothing to infer. A
+    * `v IS NOT NULL` filter does not do this: a logical Filter does not
+    * narrow its output's nullability. */
+  private def bucketKey(sentinel: Long): Column = coalesce(col("bucket"), lit(sentinel))
 
   /** IVF (inverted-file) ANN: a seeded k-means coarse quantizer assigns
     * every vector to one of `nlist` cells; a query probes its `nprobe`
@@ -225,9 +238,10 @@ object Similarity {
       planes: Int = 6, dim: Int = 64): DataFrame = {
     val e = withLshBucket(prepared, planes, dim)
     val q = e.filter(queryFilter)
-      .select(col("id").as("qid"), col("v").as("va"), col("nrm").as("qn"), col("bucket"))
+      .select(col("id").as("qid"), col("v").as("va"), col("nrm").as("qn"),
+        bucketKey(-1L).as("bucket"))
     val x = e.select(col("id").as("nid"), col("v").as("vb"), col("nrm").as("nn"),
-      col("bucket").as("bucket2"))
+      bucketKey(-2L).as("bucket2"))
     q.join(x, col("bucket") === col("bucket2") && col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosSim)
       .transform(rankTopK(k))
@@ -352,9 +366,9 @@ object Similarity {
   def annTopKFromHashed(e: DataFrame, queryFilter: Column, k: Int): DataFrame = {
     val q = e.filter(queryFilter)
       .select(col("id").as("qid"), col("v").as("va"), col("nrm").as("qn"),
-        col("tbl"), col("bucket"))
+        col("tbl"), bucketKey(-1L).as("bucket"))
     val x = e.select(col("id").as("nid"), col("v").as("vb"), col("nrm").as("nn"),
-      col("tbl").as("tbl2"), col("bucket").as("bucket2"))
+      col("tbl").as("tbl2"), bucketKey(-2L).as("bucket2"))
     q.join(x, col("tbl") === col("tbl2") && col("bucket") === col("bucket2") &&
         col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosSim)

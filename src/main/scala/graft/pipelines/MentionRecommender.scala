@@ -121,23 +121,34 @@ object MentionRecommender {
         .as("recommendations"))
 
   /** Fit ALS and emit top-k recommendations per user, exploded to rows
-    * (user_id, rn, item, rating). Deterministic given the seed and a
-    * pinned shuffle-partition count (SURVEY §5.3).
+    * (user_id, rn, item, rating), ORDERED by (user_id, rn) — the output
+    * q53 and ALSSpec read in order. Deterministic given the seed and a
+    * pinned shuffle-partition count (SURVEY §5.3). Callers that only
+    * aggregate the rows use [[recommendUnordered]], which skips the
+    * global sort (a range-partition sampling job plus an exchange).
     *
     * `numBlocks <= 0` keeps Spark's own default (10x10 blocks = 100
     * factor-join tasks per sweep) — the right setting on a real cluster,
     * where block count should track parallelism, not be pinned to a
     * local constant. The local bench entry (q53) passes 4: same math,
     * far fewer stages on a single machine. */
-  def recommend(events: DataFrame, k: Int = 5, numBlocks: Int = 0): DataFrame = {
+  def recommend(events: DataFrame, k: Int = 5, numBlocks: Int = 0): DataFrame =
+    recommendUnordered(events, k, numBlocks)._1.orderBy(col("user_id"), col("rn"))
+
+  /** [[recommend]]'s rows UNORDERED, together with the (user, item, y)
+    * frame the model was fitted on — already materialized by the fit,
+    * so a caller checking the rows against the observed users and items
+    * reads it instead of re-scanning events. */
+  def recommendUnordered(events: DataFrame, k: Int, numBlocks: Int)
+      : (DataFrame, DataFrame) = {
     val (model, inter) = fitModel(events, numBlocks)
     val users = inter.select(col("user")).distinct()
-    model.recommendForUserSubset(users, k)
+    val rows = model.recommendForUserSubset(users, k)
       .select(col("user").as("user_id"),
         posexplode(col("recommendations")).as(Seq("pos", "rec")))
       .select(col("user_id"), (col("pos") + 1).as("rn"),
         col("rec.item").as("item"), round(col("rec.rating"), 4).as("rating"))
-      .orderBy(col("user_id"), col("rn"))
+    (rows, inter)
   }
 
   /** The item-side mirror of [[recommend]] — `recommendForItemSubset`:
@@ -147,16 +158,23 @@ object MentionRecommender {
     * fitted model carries both factor matrices). Same fit, same seed —
     * one model answers both directions; output exploded to
     * (item, rn, user_id, rating) rows with the same rank/rounding
-    * conventions as the user side. */
-  def recommendItems(events: DataFrame, k: Int = 5, numBlocks: Int = 0): DataFrame = {
+    * conventions as the user side, ORDERED by (item, rn) for q275 and
+    * ALSSpec; [[recommendItemsUnordered]] skips the sort. */
+  def recommendItems(events: DataFrame, k: Int = 5, numBlocks: Int = 0): DataFrame =
+    recommendItemsUnordered(events, k, numBlocks)._1.orderBy(col("item"), col("rn"))
+
+  /** [[recommendItems]]' rows UNORDERED, together with the fit's
+    * materialized (user, item, y) frame (see [[recommendUnordered]]). */
+  def recommendItemsUnordered(events: DataFrame, k: Int, numBlocks: Int)
+      : (DataFrame, DataFrame) = {
     val (model, inter) = fitModel(events, numBlocks)
     val items = inter.select(col("item")).distinct()
-    model.recommendForItemSubset(items, k)
+    val rows = model.recommendForItemSubset(items, k)
       .select(col("item"),
         posexplode(col("recommendations")).as(Seq("pos", "rec")))
       .select(col("item"), (col("pos") + 1).as("rn"),
         col("rec.user").as("user_id"), round(col("rec.rating"), 4).as("rating"))
-      .orderBy(col("item"), col("rn"))
+    (rows, inter)
   }
 
   /** Shared W2 fit: interactions → seeded implicit ALS (reference

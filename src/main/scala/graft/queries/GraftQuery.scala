@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One named, driver-checkable query.
   *
@@ -29,7 +30,9 @@ final case class GraftQuery(
 object Tables {
   import org.apache.spark.sql.functions._
 
-  /** Load one driver-provided table (TESTDATA.md).
+  /** Load one driver-provided table (TESTDATA.md). Runs no Spark job:
+    * the schema comes from [[footerSchema]], a driver-side footer read,
+    * instead of Spark's schema-inference job.
     *
     * `events.ts` has changed physical type across driver data
     * generations — TIMESTAMP(NANOS) in early rounds (which Spark 4
@@ -37,8 +40,10 @@ object Tables {
     * raw nanos via the legacy flag and truncated to micros with exact
     * integer division: ns values ~1.7e18 exceed double's 2^53 exact
     * range, no float math), plain TIMESTAMP(MICROS) without UTC
-    * adjustment (Spark: TIMESTAMP_NTZ) since round 14. [[normalizeTs]]
-    * sniffs the footer schema and normalizes either encoding to
+    * adjustment (Spark: TIMESTAMP_NTZ) since round 14. The footer read
+    * converts under the same session conf as inference, so the legacy
+    * flag still yields LongType for the first and TimestampNTZType for
+    * the second; [[normalizeTs]] then normalizes either encoding to
     * session-UTC TimestampType, so every downstream query sees one ts
     * type regardless of which generation wrote the file. DuckDB reads
     * the same column natively; with a UTC session the wall-clock values
@@ -46,12 +51,42 @@ object Tables {
     */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-    } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    if (name == "events") normalizeTs(df) else df
+  }
+
+  /** The schema Spark's inference job would produce for
+    * `spark.read.parquet(path)`, read on the driver from one parquet
+    * footer (row-group metadata skipped) and converted by Spark's own
+    * footer converter under the session's current conf: the same file
+    * and the same conversion as the job, without the job. For a
+    * directory that is the first data file in path order, skipping
+    * names that start with `_` or `.` (summary files are not
+    * consulted). Nothing is memoized: each call reads its footer. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root)
+    val file = if (status.isFile) status else {
+      val files = fs.listFiles(root, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .minByOption(_.getPath.toString)
+        .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
     }
+    val footer = ParquetFileReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Normalize the `ts` column to TimestampType across the data

@@ -30,24 +30,25 @@ object InvariantQueries {
       "q76_als_invariants",
       (s, d) => {
         val events = t(s, d, "events")
-        val recs = MentionRecommender.recommend(events, k = 5, numBlocks = 4).cache()
-        val inter = MentionRecommender.interactions(events).cache()
-        val obsUsers = inter.select(col("user_id").cast("int").as("u")).distinct()
+        // one plan over the unordered rows: the observed users and
+        // items come from the fit's materialized interactions (no
+        // second events scan), one per-user rollup carries every check,
+        // and its row count is the coverage
+        val (recs, inter) = MentionRecommender.recommendUnordered(events, k = 5, numBlocks = 4)
+        val obsUsers = inter.select(col("user").as("u")).distinct()
         val obsItems = inter.select(col("item").as("it")).distinct()
-        // two passes over the cached recs: per-user rollup (coverage =
-        // row count of the rollup, so no separate countDistinct branch),
-        // and one membership join covering both closure checks
-        val lists = recs.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("len"), max(col("rn")).as("maxrn"))
-          .agg(count(lit(1)).as("n_users_covered"),
-            max(col("maxrn")).cast("long").as("max_rn"),
-            min(col("len")).as("min_list_len"))
-        val closure = recs
+        recs
           .join(obsItems, recs("item") === obsItems("it"), "left")
           .join(obsUsers, recs("user_id") === obsUsers("u"), "left")
-          .agg(sum(when(col("it").isNull, 1L).otherwise(0L)).as("n_bad_items"),
-            sum(when(col("u").isNull, 1L).otherwise(0L)).as("n_bad_users"))
-        lists.crossJoin(closure)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("len"), max(col("rn")).as("maxrn"),
+            sum(when(col("it").isNull, 1L).otherwise(0L)).as("bad_items"),
+            sum(when(col("u").isNull, 1L).otherwise(0L)).as("bad_users"))
+          .agg(count(lit(1)).as("n_users_covered"),
+            max(col("maxrn")).cast("long").as("max_rn"),
+            min(col("len")).as("min_list_len"),
+            sum(col("bad_items")).as("n_bad_items"),
+            sum(col("bad_users")).as("n_bad_users"))
       },
       Some("""SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_covered,
               CAST(5 AS BIGINT) AS max_rn,
@@ -70,24 +71,25 @@ object InvariantQueries {
       "q276_als_item_invariants",
       (s, d) => {
         val events = t(s, d, "events")
-        val recs = MentionRecommender.recommendItems(events, k = 5, numBlocks = 4).cache()
-        val inter = MentionRecommender.interactions(events).cache()
-        val obsUsers = inter.select(col("user_id").cast("int").as("u")).distinct()
+        // the q76 shape: one plan over the unordered rows, observed
+        // users from the fit's interactions; the lag window sorts
+        // within each item by itself
+        val (recs, inter) = MentionRecommender.recommendItemsUnordered(events, k = 5, numBlocks = 4)
+        val obsUsers = inter.select(col("user").as("u")).distinct()
         val w = Window.partitionBy(col("item")).orderBy(col("rn"))
-        val lists = recs
+        recs
+          .join(obsUsers, recs("user_id") === obsUsers("u"), "left")
           .withColumn("prev_rating", lag(col("rating"), 1).over(w))
           .groupBy(col("item"))
           .agg(count(lit(1)).as("len"), max(col("rn")).as("maxrn"),
             sum(when(col("rating") > col("prev_rating"), 1L).otherwise(0L))
-              .as("rank_viol"))
+              .as("rank_viol"),
+            sum(when(col("u").isNull, 1L).otherwise(0L)).as("bad_users"))
           .agg(count(lit(1)).as("n_items_covered"),
             max(col("maxrn")).cast("long").as("max_rn"),
             min(col("len")).as("min_list_len"),
-            sum(col("rank_viol")).as("n_rank_violations"))
-        val closure = recs
-          .join(obsUsers, recs("user_id") === obsUsers("u"), "left")
-          .agg(sum(when(col("u").isNull, 1L).otherwise(0L)).as("n_bad_users"))
-        lists.crossJoin(closure)
+            sum(col("rank_viol")).as("n_rank_violations"),
+            sum(col("bad_users")).as("n_bad_users"))
       },
       Some("""SELECT CAST(count(DISTINCT CAST(props->>'k' AS INTEGER)) AS BIGINT)
                        AS n_items_covered,

@@ -25,11 +25,12 @@ object EventStreams {
     * wants a schema upfront; the physical ts type has changed across
     * driver data generations (nanos-as-long vs TIMESTAMP_NTZ — see
     * graft.queries.Tables), so read it from the actual file's footer
-    * (one driver-side metadata read, no data scan) and normalize ts
-    * the same way the batch loader does. */
+    * with the batch loader's [[graft.queries.Tables.footerSchema]] (one
+    * driver-side metadata read, no data scan, no Spark job) and
+    * normalize ts the same way the batch loader does. */
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val raw = graft.queries.Tables.footerSchema(spark, s"$sfDir/events.parquet")
     graft.queries.Tables.normalizeTs(
       spark.readStream
         .schema(raw)

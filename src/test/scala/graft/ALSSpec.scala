@@ -61,4 +61,16 @@ class ALSSpec extends SparkSpec {
       assert(ratings.zip(ratings.tail).forall { case (a, b) => a >= b })
     }
   }
+
+  test("q76/q276 plans: no cached relation, no range sort") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    Seq("q76_als_invariants", "q276_als_item_invariants").foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sf)
+      val cached = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      assert(cached.isEmpty, n)
+      assert(!df.queryExecution.executedPlan.toString.toLowerCase.contains("rangepartitioning"), n)
+      assert(df.collect().length == 1, n)
+      Sessions.sweep(spark)
+    }
+  }
 }

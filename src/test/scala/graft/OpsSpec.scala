@@ -319,6 +319,46 @@ class OpsSpec extends SparkSpec {
     prepared.unpersist()
   }
 
+  test("bucket joins hash each corpus row once per join side") {
+    // from `bucket = bucket2` over a nullable bucket Catalyst infers
+    // `isnotnull(bucket)` and pushes it below the hashing projection,
+    // hashing every row twice per side; the faces join on a non-null key
+    val prepared = Similarity.prepare(Tables(spark, sf, "embeddings"))
+    def hashes(df: org.apache.spark.sql.DataFrame): Int =
+      "sign_lsh\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString).size
+    assert(hashes(Similarity.annTopK(prepared, col("id") < 50, k = 3, planes = 4)) == 2)
+    assert(hashes(Similarity.lshNearDupPairs(prepared, minCosine = 0.35, planes = 4)) == 2)
+    assert(hashes(Similarity.annTopKTables(prepared, col("id") < 50, k = 3,
+      tables = 4, planes = 4)) == 2 * 4)
+  }
+
+  test("null vectors match nothing in the LSH bucket joins") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val v = (n: Boolean) => AttributeReference("v", ArrayType(DoubleType), nullable = n)()
+    assert(graft.functions.SignLsh(v(true), 4, 2).nullable)
+    assert(!graft.functions.SignLsh(v(false), 4, 2).nullable)
+    // ids 3 and 4 carry null vectors: at the parent's `bucket = bucket2`
+    // their null buckets matched nothing, and the non-null join key must
+    // keep it so (two null vectors must not pair with each other either)
+    val vecs = Seq[(Long, Option[Seq[Double]])](
+      0L -> Some(Seq(1.0, 0.1)), 1L -> Some(Seq(1.0, 0.2)), 2L -> Some(Seq(1.0, 0.3)),
+      3L -> None, 4L -> None).toDF("vec_id", "embedding")
+    val prepared = Similarity.prepare(vecs)
+    val faces = Seq(
+      Similarity.annTopK(prepared, col("id") < 10, k = 3, planes = 4, dim = 2)
+        .select(col("qid"), col("nid")),
+      Similarity.lshNearDupPairs(prepared, minCosine = 0.0, planes = 4, dim = 2)
+        .select(col("d1"), col("d2")),
+      Similarity.annTopKTables(prepared, col("id") < 10, k = 3, tables = 2, planes = 4, dim = 2)
+        .select(col("qid"), col("nid")))
+    faces.foreach { f =>
+      val pairs = f.as[(Long, Long)].collect().toSeq
+      assert(pairs.nonEmpty) // the three non-null vectors share a bucket
+      assert(pairs.forall { case (a, b) => a < 3 && b < 3 }, pairs)
+    }
+  }
+
   test("kaplanMeier: hand-computed survival on a censored fixture") {
     // 6 subjects, durations/events chosen so every KM mechanic fires
     // and the expectations are computable on paper (an independent
